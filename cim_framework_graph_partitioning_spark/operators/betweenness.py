@@ -29,11 +29,32 @@ north rule alongside PageRank/HITS.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from collections.abc import Iterator
+from contextlib import contextmanager
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.barrier import release_checkpoint
 from ..plans.scale import auto_blocks
+from ..plans.superstep import LoopScope, loop_scope, observed_checkpoint
+
+
+@contextmanager
+def _sampled_bfs(
+    spark: SparkSession, edges: DataFrame, sources: DataFrame, max_depth: int
+) -> Iterator[tuple[LoopScope, DataFrame, list[DataFrame]]]:
+    """Setup and forward phase shared by the sampled estimators: the
+    deduped edge table cached by src_id (built under the session conf),
+    then the shuffle pin and the batched BFS levels. Yields (scope,
+    edges, levels); the cache and every level are released on exit."""
+    p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
+    with loop_scope(spark) as scope:
+        e = scope.cache(
+            edges.select("src_id", "dst_id").distinct().repartition(p, "src_id")
+        )
+        e.count()
+        scope.pin(p, pin_aqe=False)
+        yield scope, e, _bfs_levels(scope, e, sources, max_depth)
 
 
 def harmonic_centrality_sampled(
@@ -50,17 +71,7 @@ def harmonic_centrality_sampled(
     1/level over the per-level membership tables — no second phase.
     Returns (id, harmonic) for every reached vertex; sources score 0
     unless another source reaches them."""
-    p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    e = (
-        edges.select("src_id", "dst_id").distinct()
-        .repartition(p, "src_id")
-        .persist()
-    )
-    e.count()
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with _sampled_bfs(spark, edges, sources, max_depth) as (_, _, levels):
         if not levels:
             return spark.createDataFrame([], "id long, harmonic double")
         parts = [levels[0].select("v", F.lit(0.0).alias("h"))]
@@ -69,41 +80,33 @@ def harmonic_centrality_sampled(
         out = parts[0]
         for part in parts[1:]:
             out = out.unionByName(part)
-        result = (
+        return (
             out.groupBy(F.col("v").alias("id"))
             .agg(F.sum("h").alias("harmonic"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for lv in levels:
-        release_checkpoint(lv)
-    return result
 
 
 def _bfs_levels(
-    spark: SparkSession,
+    scope: LoopScope,
     e: DataFrame,
     sources: DataFrame,
     max_depth: int,
 ) -> list[DataFrame]:
     """Batched multi-source level-synchronous BFS over a cached,
     src-partitioned edge table. Returns one (s, v, sigma) frame per
-    level (each localCheckpointed — caller releases); empty list if
-    there are no sources. sigma = number of shortest s→v paths."""
+    level (each localCheckpointed and owned by ``scope``); empty list
+    if there are no sources. sigma = number of shortest s→v paths."""
     levels: list[DataFrame] = []
-    frontier = (
+    frontier = scope.checkpoint(
         sources.select(
             F.col("id").alias("s"),
             F.col("id").alias("v"),
             F.lit(1.0).alias("sigma"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     if frontier.isEmpty():
-        release_checkpoint(frontier)
         return []
     levels.append(frontier)
     reached = frontier.select("s", "v")
@@ -113,18 +116,16 @@ def _bfs_levels(
         # lazy union of the already-checkpointed level frames — the
         # former re-checkpoint of the whole reached set every level
         # re-materialized O(levels x reached) rows for nothing.
-        obs = Observation()
-        nxt = (
+        nxt, m = observed_checkpoint(
             frontier.hint("shuffle_hash")
             .join(e, frontier.v == e.src_id)
             .groupBy("s", F.col("dst_id").alias("v"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(reached, ["s", "v"], "left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(reached, ["s", "v"], "left_anti"),
+            n=F.count(F.lit(1)),
         )
-        if (obs.get["n"] or 0) == 0:
-            release_checkpoint(nxt)
+        scope.own(nxt)
+        if m["n"] == 0:
             break
         levels.append(nxt)
         reached = reached.unionByName(nxt.select("s", "v"))
@@ -148,19 +149,7 @@ def betweenness_sampled(
     ``sources``: one column ``id``. ``max_depth`` bounds the BFS —
     raises if the frontier is still non-empty, instead of silently
     truncating dependencies."""
-    p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    e = (
-        edges.select("src_id", "dst_id").distinct()
-        .repartition(p, "src_id")
-        .persist()
-    )
-    e.count()
-
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    scratch: list[DataFrame] = []  # checkpoints to release at the end
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with _sampled_bfs(spark, edges, sources, max_depth) as (scope, e, levels):
         if not levels:
             return spark.createDataFrame([], "id long, bc double")
 
@@ -184,7 +173,7 @@ def betweenness_sampled(
                 .groupBy("s", "v")
                 .agg(F.sum("ratio").alias("rsum"))
             )
-            delta = (
+            delta = scope.checkpoint(
                 levels[d - 1].join(contrib, ["s", "v"], "left")
                 .select(
                     "s", "v", "sigma",
@@ -192,9 +181,7 @@ def betweenness_sampled(
                         F.coalesce(F.col("rsum"), F.lit(0.0)) * F.col("sigma")
                     ).alias("delta"),
                 )
-                .localCheckpoint(eager=True)
             )
-            scratch.append(delta)
         # the level-0 sweep output is the sources' own dependency —
         # Brandes excludes s from its own accumulation: drop s == v
         bc_parts.append(
@@ -204,17 +191,11 @@ def betweenness_sampled(
         out = bc_parts[0]
         for part in bc_parts[1:]:
             out = out.unionByName(part)
-        result = (
+        return (
             out.groupBy(F.col("v").alias("id"))
             .agg(F.sum("delta").alias("bc"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for fr in levels + scratch:
-        release_checkpoint(fr)
-    return result
 
 
 def closeness_centrality_sampled(
@@ -232,17 +213,7 @@ def closeness_centrality_sampled(
     state, supersteps = reachable diameter regardless of sample size).
     Returns (id, closeness) for every source; sources reaching nothing
     score 0.0."""
-    p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    e = (
-        edges.select("src_id", "dst_id").distinct()
-        .repartition(p, "src_id")
-        .persist()
-    )
-    e.count()
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with _sampled_bfs(spark, edges, sources, max_depth) as (_, _, levels):
         if not levels:
             return spark.createDataFrame([], "id long, closeness double")
         parts = [
@@ -252,7 +223,7 @@ def closeness_centrality_sampled(
         out = parts[0]
         for part in parts[1:]:
             out = out.unionByName(part)
-        result = (
+        return (
             out.groupBy(F.col("s").alias("id"))
             .agg(
                 F.count("*").alias("r"),
@@ -269,12 +240,6 @@ def closeness_centrality_sampled(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for lv in levels:
-        release_checkpoint(lv)
-    return result
 
 
 def eccentricity_sampled(
@@ -291,17 +256,7 @@ def eccentricity_sampled(
     one pair-keyed state, supersteps = reachable diameter regardless of
     sample size. Returns (id, eccentricity) for every source
     (isolated sources get 0)."""
-    p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    e = (
-        edges.select("src_id", "dst_id").distinct()
-        .repartition(p, "src_id")
-        .persist()
-    )
-    e.count()
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        levels = _bfs_levels(spark, e, sources, max_depth)
+    with _sampled_bfs(spark, edges, sources, max_depth) as (_, _, levels):
         if not levels:
             return spark.createDataFrame([], "id long, eccentricity long")
         parts = [
@@ -313,14 +268,8 @@ def eccentricity_sampled(
         out = parts[0]
         for part in parts[1:]:
             out = out.unionByName(part)
-        result = (
+        return (
             out.groupBy(F.col("s").alias("id"))
             .agg(F.max("d").cast("long").alias("eccentricity"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        e.unpersist()
-    for lv in levels:
-        release_checkpoint(lv)
-    return result

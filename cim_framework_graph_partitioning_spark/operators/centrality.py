@@ -39,11 +39,12 @@ Scale shape (same discipline as pagerank.py / hits.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.barrier import checkpoint_leaf_ids, release_checkpoint
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 
 
 def katz_centrality(
@@ -71,27 +72,18 @@ def katz_centrality(
     sc = spark.sparkContext
     p = num_blocks or auto_blocks(edges.count(), sc.defaultParallelism)
 
-    # loop-scoped conf BEFORE setup; caches released in the finally
-    # (they used to leak on a runner exception — ADVICE r5)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    verts = e_by_src = None
-    try:
-        verts = (
+    # loop conf BEFORE setup
+    with loop_scope(spark, p) as scope:
+        verts = scope.cache(
             edges.select(F.col("src_id").alias("id"))
             .unionByName(edges.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         n = verts.count()
         if n == 0:
             return spark.createDataFrame([], "id long, katz double"), 0
-        e_by_src = (
-            edges.select("src_id", "dst_id", "weight")
-            .repartition(p, "src_id")
-            .persist()
+        e_by_src = scope.cache(
+            edges.select("src_id", "dst_id", "weight").repartition(p, "src_id")
         )
         e_by_src.count()
 
@@ -108,8 +100,7 @@ def katz_centrality(
             # the state IS the vertex table — one left join with the
             # sums carries prev along; delta rides the checkpoint as an
             # observed metric (one job per superstep, pagerank pattern)
-            obs = Observation()
-            new = (
+            return observed_checkpoint(
                 state.join(sums.hint("shuffle_hash"), state.id == sums.dst_id, "left")
                 .select(
                     "id",
@@ -118,18 +109,14 @@ def katz_centrality(
                         + F.lit(alpha) * F.coalesce(F.col("s"), F.lit(0.0))
                     ).alias("katz"),
                     F.col("katz").alias("prev"),
-                )
-                .observe(
-                    obs, F.max(F.abs(F.col("katz") - F.col("prev"))).alias("d")
-                )
-                .select("id", "katz")
-                .localCheckpoint(eager=True)
+                ),
+                select=("id", "katz"),
+                max_delta=F.max(F.abs(F.col("katz") - F.col("prev"))),
             )
-            return new, {"max_delta": float(obs.get["d"] or 0.0)}
 
         runner = SuperstepRunner(
             spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+            checkpoint_every=checkpoint_every, metrics_sink=metrics_sink,
         )
         scores, steps = runner.run(
             init,
@@ -139,14 +126,6 @@ def katz_centrality(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        for c in (verts, e_by_src):
-            if c is not None:
-                c.unpersist()
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
     return scores.select("id", "katz"), steps
 
 
@@ -173,20 +152,14 @@ def salsa(
     sc = spark.sparkContext
     p = num_blocks or auto_blocks(edges.count(), sc.defaultParallelism)
 
-    # loop-scoped conf BEFORE setup; caches released in the finally
-    # (they used to leak on a runner exception — ADVICE r5)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    e_fwd = e_bwd = None
-    try:
+    # loop conf BEFORE setup
+    with loop_scope(spark, p) as scope:
         e = edges.select("src_id", "dst_id", "weight")
         # static normalized transition fractions via a window over the
         # exchange each cache needs anyway (one exchange per side; the
         # former groupBy+join+repartition chains paid two more each) —
         # cached partitioned by the join key of their half-step
-        e_fwd = (
+        e_fwd = scope.cache(
             e.repartition(p, "src_id")
             .select(
                 "src_id", "dst_id",
@@ -194,9 +167,8 @@ def salsa(
                     Window.partitionBy("src_id")
                 )).alias("fo"),
             )
-            .persist()
         )
-        e_bwd = (
+        e_bwd = scope.cache(
             e.repartition(p, "dst_id")
             .select(
                 "src_id", "dst_id",
@@ -204,7 +176,6 @@ def salsa(
                     Window.partitionBy("dst_id")
                 )).alias("fi"),
             )
-            .persist()
         )
         e_fwd.count()
         e_bwd.count()
@@ -238,22 +209,15 @@ def salsa(
             prev = state.select("id", F.col("hub").alias("prev_hub"))
             # job 2: checkpoint with the delta riding as an observed
             # metric — the former third job (delta agg) is gone
-            obs = Observation()
-            new = (
-                h_tbl.join(prev, "id", "left")
-                .observe(
-                    obs,
-                    F.max(
-                        F.abs(
-                            F.col("hub")
-                            - F.coalesce(F.col("prev_hub"), F.lit(0.0))
-                        )
-                    ).alias("d"),
-                )
-                .select("id", "hub")
-                .localCheckpoint(eager=True)
+            new, m = observed_checkpoint(
+                h_tbl.join(prev, "id", "left"),
+                select=("id", "hub"),
+                max_delta=F.max(
+                    F.abs(F.col("hub") - F.coalesce(F.col("prev_hub"), F.lit(0.0)))
+                ),
             )
-            return new, {"max_delta": float(obs.get["d"] or 0.0)}
+            release_checkpoint(a_tbl)  # consumed by the materialized new
+            return new, m
 
         # State is the hub distribution only (auth lives on the OTHER
         # bipartite side — a per-step full-outer merge would add a barrier
@@ -262,7 +226,7 @@ def salsa(
         # the SQL oracle replays this exact contract.
         runner = SuperstepRunner(
             spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+            checkpoint_every=checkpoint_every, metrics_sink=metrics_sink,
         )
         hubs, steps = runner.run(
             init,
@@ -291,12 +255,7 @@ def salsa(
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-        for c in (e_fwd, e_bwd):
-            if c is not None:
-                c.unpersist()
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
+        # the final hubs are superseded by `out`; with no superstep run
+        # they are the lazy init over the caller's edges
+        release_checkpoint(hubs, protect=checkpoint_leaf_ids(edges))
     return out, steps

@@ -36,11 +36,11 @@ primitive the partitioner's move-selection uses implicitly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 from .mis import _prio_hash
 
 
@@ -66,115 +66,98 @@ def greedy_coloring(
     p = num_blocks or auto_blocks(
         edges.count(), spark.sparkContext.defaultParallelism
     )
-    # loop-scoped conf BEFORE setup (pagerank discipline); restored at
-    # the end of coloring below
-    _aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    _shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    # ONE exchange: repartition by the probe key e_u, dedup in place
-    # (hash(e_u) clusters every (e_v, e_u) group — kcore pattern)
-    _e = edges.select("src_id", "dst_id").filter(
-        F.col("src_id") != F.col("dst_id")
-    )
-    und = (
-        _e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
-        .unionByName(
-            _e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
+    # loop conf BEFORE setup (pagerank discipline)
+    with loop_scope(spark, p) as scope:
+        # ONE exchange: repartition by the probe key e_u, dedup in place
+        # (hash(e_u) clusters every (e_v, e_u) group — kcore pattern)
+        _e = edges.select("src_id", "dst_id").filter(
+            F.col("src_id") != F.col("dst_id")
         )
-        .repartition(p, "e_u")
-        .dropDuplicates(["e_v", "e_u"])
-        .persist()
-    )
-    und.count()
+        und = scope.cache(
+            _e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
+            .unionByName(
+                _e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
+            )
+            .repartition(p, "e_u")
+            .dropDuplicates(["e_v", "e_u"])
+        )
+        und.count()
 
-    verts = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
-    init = verts.select(
-        "id",
-        _prio_hash(seed, hash_family).alias("h"),
-        F.lit(None).cast("int").alias("color"),
-    )
+        verts = (
+            edges.select(F.col("src_id").alias("id"))
+            .unionByName(edges.select(F.col("dst_id").alias("id")))
+            .distinct()
+        )
+        init = verts.select(
+            "id",
+            _prio_hash(seed, hash_family).alias("h"),
+            F.lit(None).cast("int").alias("color"),
+        )
 
-    def step_fn(state: DataFrame, step: int):
-        uncol = state.filter(F.col("color").isNull())
-        # min priority among UNCOLORED neighbors, riding the cache
-        u = uncol.select("id", "h").hint("shuffle_hash")
-        nbr_min = (
-            u.join(und, u.id == und.e_u)
-            .select(
-                F.col("e_v").alias("v"),
-                F.struct(F.col("h"), F.col("id")).alias("nprio"),
+        def step_fn(state: DataFrame, step: int):
+            uncol = state.filter(F.col("color").isNull())
+            # min priority among UNCOLORED neighbors, riding the cache
+            u = uncol.select("id", "h").hint("shuffle_hash")
+            nbr_min = (
+                u.join(und, u.id == und.e_u)
+                .select(
+                    F.col("e_v").alias("v"),
+                    F.struct(F.col("h"), F.col("id")).alias("nprio"),
+                )
+                .groupBy("v")
+                .agg(F.min("nprio").alias("min_nprio"))
             )
-            .groupBy("v")
-            .agg(F.min("nprio").alias("min_nprio"))
-        )
-        ready = (
-            uncol.join(nbr_min.hint("shuffle_hash"),
-                       uncol.id == nbr_min.v, "left")
-            .filter(
-                F.col("min_nprio").isNull()
-                | (F.struct(F.col("h"), F.col("id")) < F.col("min_nprio"))
+            ready = (
+                uncol.join(nbr_min.hint("shuffle_hash"),
+                           uncol.id == nbr_min.v, "left")
+                .filter(
+                    F.col("min_nprio").isNull()
+                    | (F.struct(F.col("h"), F.col("id")) < F.col("min_nprio"))
+                )
+                .select("id")
             )
-            .select("id")
-        )
-        # smallest color unused by already-COLORED neighbors: fold over
-        # the sorted distinct neighbor-color set (mex of a sorted set)
-        colored = state.filter(F.col("color").isNotNull()).select(
-            F.col("id").alias("e_u"), "color"
-        ).hint("shuffle_hash")
-        r = ready.select(F.col("id").alias("e_v")).hint("shuffle_hash")
-        nbr_colors = (
-            r.join(und, "e_v")
-            .join(colored, "e_u")
-            .groupBy("e_v")
-            .agg(F.collect_set("color").alias("cs"))
-        )
-        new_colors = (
-            ready.join(nbr_colors, ready.id == nbr_colors.e_v, "left")
-            .select(
-                "id",
-                F.aggregate(
-                    F.array_sort(
-                        F.coalesce(F.col("cs"), F.array().cast("array<int>"))
-                    ),
-                    F.lit(0),
-                    lambda acc, x: F.when(x == acc, acc + 1).otherwise(acc),
-                ).cast("int").alias("new_color"),
+            # smallest color unused by already-COLORED neighbors: fold over
+            # the sorted distinct neighbor-color set (mex of a sorted set)
+            colored = state.filter(F.col("color").isNotNull()).select(
+                F.col("id").alias("e_u"), "color"
+            ).hint("shuffle_hash")
+            r = ready.select(F.col("id").alias("e_v")).hint("shuffle_hash")
+            nbr_colors = (
+                r.join(und, "e_v")
+                .join(colored, "e_u")
+                .groupBy("e_v")
+                .agg(F.collect_set("color").alias("cs"))
             )
-        )
-        new_state = (
-            state.join(new_colors, "id", "left")
-            .select(
-                "id", "h",
-                F.coalesce(F.col("color"), F.col("new_color")).alias("color"),
+            new_colors = (
+                ready.join(nbr_colors, ready.id == nbr_colors.e_v, "left")
+                .select(
+                    "id",
+                    F.aggregate(
+                        F.array_sort(
+                            F.coalesce(F.col("cs"), F.array().cast("array<int>"))
+                        ),
+                        F.lit(0),
+                        lambda acc, x: F.when(x == acc, acc + 1).otherwise(acc),
+                    ).cast("int").alias("new_color"),
+                )
             )
-            .observe(
-                obs := Observation(),
-                F.sum(
-                    F.when(F.col("color").isNull(), 1).otherwise(0)
-                ).alias("n"),
+            # ONE job per superstep: uncolored-count rides the checkpoint
+            return observed_checkpoint(
+                state.join(new_colors, "id", "left")
+                .select(
+                    "id", "h",
+                    F.coalesce(F.col("color"), F.col("new_color")).alias("color"),
+                ),
+                uncolored=F.sum(F.when(F.col("color").isNull(), 1).otherwise(0)),
             )
-            .localCheckpoint(eager=True)
-        )
-        # ONE job per superstep: uncolored-count rides the checkpoint
-        return new_state, {"uncolored": float(obs.get["n"] or 0)}
 
-    runner = SuperstepRunner(
-        spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
-    )
-    try:
+        runner = SuperstepRunner(
+            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
+            checkpoint_every=checkpoint_every,
+        )
         state, steps = runner.run(
             init, step_fn, converged=lambda m: m["uncolored"] == 0,
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", _aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", _shuf_was)
-        und.unpersist()
     return state.select("id", "color"), steps

@@ -25,10 +25,11 @@ Two algorithms, identical results (component = min vertex id):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.superstep import SuperstepRunner
+from ..plans.barrier import checkpoint_leaf_ids, release_checkpoint
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 from ..plans.scale import auto_blocks
 from .edges import symmetrize
 
@@ -50,20 +51,14 @@ def connected_components(
             resume=resume, run_id=run_id,
         )
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        und = (
-            symmetrize(edges).select("src_id", "dst_id")
-            .repartition(p, "src_id").persist()
+    with loop_scope(spark, p) as scope:
+        und = scope.cache(
+            symmetrize(edges).select("src_id", "dst_id").repartition(p, "src_id")
         )
-        verts = (
+        verts = scope.cache(
             und.select(F.col("src_id").alias("id"))
             .unionByName(und.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         init = verts.select("id", F.col("id").alias("component"))
 
@@ -75,8 +70,7 @@ def connected_components(
             )
             # ONE job per superstep: the changed-count rides the
             # checkpoint materialization as an observed metric
-            obs = Observation()
-            new_labels = (
+            return observed_checkpoint(
                 labels.join(nbr_min, labels.id == nbr_min.dst_id, "left")
                 .select(
                     "id",
@@ -85,17 +79,12 @@ def connected_components(
                         F.coalesce(F.col("nbr_component"), F.col("component")),
                     ).alias("component"),
                     F.col("component").alias("prev"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("component") != F.col("prev"), 1).otherwise(0)
-                    ).alias("chg"),
-                )
-                .select("id", "component")
-                .localCheckpoint(eager=True)
+                ),
+                select=("id", "component"),
+                changed=F.sum(
+                    F.when(F.col("component") != F.col("prev"), 1).otherwise(0)
+                ),
             )
-            return new_labels, {"changed": float(obs.get["chg"] or 0)}
 
         runner = SuperstepRunner(spark, checkpoint_dir=checkpoint_dir, run_id=run_id)
         labels, steps = runner.run(
@@ -103,11 +92,6 @@ def connected_components(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
-    verts.unpersist()
     return labels, steps
 
 
@@ -136,16 +120,11 @@ def _cc_two_phase(
     per superstep, the driver never holds edges.
     """
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        verts = (
+    with loop_scope(spark, p) as scope:
+        verts = scope.cache(
             edges.select(F.col("src_id").alias("id"))
             .unionByName(edges.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         init = (
             edges.filter(F.col("src_id") != F.col("dst_id"))
@@ -190,26 +169,18 @@ def _cc_two_phase(
             # ONE job per superstep: the edge-set signature (count + 2
             # independent 32-bit hash sums) rides the checkpoint
             # materialization as observed metrics
-            obs = Observation()
-            new_e = (
-                part1.unionByName(part2).distinct()
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(1 << 32))).alias("h1"),
-                    F.sum(
-                        F.pmod(F.xxhash64("b", "a", F.lit(7)), F.lit(1 << 32))
-                    ).alias("h2"),
-                )
-                .localCheckpoint(eager=True)
+            new_e, m = observed_checkpoint(
+                part1.unionByName(part2).distinct(),
+                n=F.count(F.lit(1)),
+                h1=F.sum(F.pmod(F.xxhash64("a", "b"), F.lit(1 << 32))),
+                h2=F.sum(F.pmod(F.xxhash64("b", "a", F.lit(7)), F.lit(1 << 32))),
             )
-            m = obs.get
             sym.unpersist()
             ls.unpersist()
             sig = (m["n"], m["h1"], m["h2"])
             changed = 0.0 if sig == prev_sig["sig"] else 1.0
             prev_sig["sig"] = sig
-            return new_e, {"changed": changed, "edges": float(m["n"])}
+            return new_e, {"changed": changed, "edges": m["n"]}
 
         runner = SuperstepRunner(spark, checkpoint_dir=checkpoint_dir, run_id=run_id)
         stars, steps = runner.run(
@@ -217,29 +188,29 @@ def _cc_two_phase(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    if steps >= max_iter and runner.history and runner.history[-1]["changed"] != 0:
-        # max_iter exhausted before the star fixpoint: a satellite may
-        # still hold >1 center, and the left join below would then emit
-        # DUPLICATE (id, component) rows — a silently malformed labels
-        # table. Collapse to one center per satellite (min preserves the
-        # partial-contraction invariant: component ids only decrease)
-        # and surface the truncation instead of hiding it.
-        import warnings
+        if steps >= max_iter and runner.history and runner.history[-1]["changed"] != 0:
+            # max_iter exhausted before the star fixpoint: a satellite may
+            # still hold >1 center, and the left join below would then emit
+            # DUPLICATE (id, component) rows — a silently malformed labels
+            # table. Collapse to one center per satellite (min preserves the
+            # partial-contraction invariant: component ids only decrease)
+            # and surface the truncation instead of hiding it.
+            import warnings
 
-        warnings.warn(
-            f"connected_components: star fixpoint not reached in "
-            f"{max_iter} supersteps; emitting one min-center per vertex "
-            f"(labels may be under-merged)",
-            stacklevel=2,
+            warnings.warn(
+                f"connected_components: star fixpoint not reached in "
+                f"{max_iter} supersteps; emitting one min-center per vertex "
+                f"(labels may be under-merged)",
+                stacklevel=2,
+            )
+            stars = stars.groupBy("a").agg(F.min("b").alias("b"))
+        labels = (
+            verts.join(stars.hint("shuffle_hash"), verts.id == stars.a, "left")
+            .select("id", F.coalesce(F.col("b"), F.col("id")).alias("component"))
         )
-        stars = stars.groupBy("a").agg(F.min("b").alias("b"))
-    labels = (
-        verts.join(stars.hint("shuffle_hash"), verts.id == stars.a, "left")
-        .select("id", F.coalesce(F.col("b"), F.col("id")).alias("component"))
-    )
-    out = labels.localCheckpoint(eager=True)
-    verts.unpersist()
+        out = labels.localCheckpoint(eager=True)
+        # the final state is superseded by `out` (the runner releases
+        # only the states it replaced); with no superstep run it is the
+        # lazy init over the caller's edges
+        release_checkpoint(stars, protect=checkpoint_leaf_ids(edges))
     return out, steps

@@ -25,11 +25,12 @@ construction, graph.py:4-6); ``topological_levels`` raises on cycles
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier, release_checkpoint
 from ..plans.scale import auto_blocks
+from ..plans.superstep import loop_scope, observed_checkpoint
 
 
 def topological_levels(
@@ -54,10 +55,8 @@ def topological_levels(
     b_verts = PlanBarrier(spark, tag="topo_verts")
     b_edges = PlanBarrier(spark, tag="topo_edges")
     b_result = PlanBarrier(spark, tag="topo_result")
-    # loop-scoped shuffle pin, restored on exit
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # loop-scoped shuffle pin; AQE stays on (see longest_path_lengths)
+    with loop_scope(spark, p, pin_aqe=False):
         while n_left > 0 and level < max_iter:
             has_in = remaining_edges.select(F.col("dst_id").alias("id")).distinct()
             # frontier is CHECKPOINTED (lineage cut), not merely cached:
@@ -92,8 +91,6 @@ def topological_levels(
             remaining, remaining_edges = new_remaining, new_edges
             n_left -= n_front
             level += 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
     if result is None:  # empty edge table → no vertices, no levels
         return spark.createDataFrame([], "id long, level int")
     return result.repartition(p, "id")
@@ -126,29 +123,31 @@ def longest_path_lengths(
         .repartition(p, "id")
         .localCheckpoint(eager=True)
     )
-    e = edges.select("src_id", "dst_id").distinct().repartition(p, "src_id").persist()
-    # loop-scoped shuffle pin, restored on exit. AQE is deliberately
-    # LEFT ALONE here: with adaptive execution disabled, this loop's
-    # accumulate-union-of-checkpoints pattern trips a reproducible
-    # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in PlanBarrier's release path
-    # (test_topological_levels fails deterministically); the peel runs
-    # one round per DAG level, so per-round replanning is cheap anyway.
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    def relax(d: DataFrame) -> DataFrame:
-        cand = (
-            d.join(e, d.id == e.src_id)
-            .groupBy(F.col("dst_id").alias("id"))
-            .agg((F.max("dist") + 1).alias("cand"))
+    with loop_scope(spark) as scope:
+        e = scope.cache(
+            edges.select("src_id", "dst_id").distinct().repartition(p, "src_id")
         )
-        return d.join(cand, "id", "left").select(
-            "id",
-            F.greatest(
-                F.col("dist"), F.coalesce(F.col("cand"), F.col("dist"))
-            ).alias("dist"),
-        )
+        # loop-scoped shuffle pin. AQE is deliberately LEFT ALONE here:
+        # with adaptive execution disabled, this loop's
+        # accumulate-union-of-checkpoints pattern trips a reproducible
+        # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in PlanBarrier's release path
+        # (test_topological_levels fails deterministically); the peel runs
+        # one round per DAG level, so per-round replanning is cheap anyway.
+        scope.pin(p, pin_aqe=False)
 
-    try:
+        def relax(d: DataFrame) -> DataFrame:
+            cand = (
+                d.join(e, d.id == e.src_id)
+                .groupBy(F.col("dst_id").alias("id"))
+                .agg((F.max("dist") + 1).alias("cand"))
+            )
+            return d.join(cand, "id", "left").select(
+                "id",
+                F.greatest(
+                    F.col("dist"), F.coalesce(F.col("cand"), F.col("dist"))
+                ).alias("dist"),
+            )
+
         for _ in range(max_iter):
             seg = dist
             for _b in range(fuse_steps):
@@ -158,23 +157,14 @@ def longest_path_lengths(
             # changed-count ride the barrier cut's materialization as an
             # observed metric; the former persist+count+cut pair
             # materialized every segment twice.
-            obs = Observation()
-            merged = (
-                seg.join(dist.select("id", F.col("dist").alias("prev")), "id")
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("dist") != F.col("prev"), 1).otherwise(0)
-                    ).alias("n"),
-                )
-                .select("id", "dist")
+            dist, m = observed_checkpoint(
+                seg.join(dist.select("id", F.col("dist").alias("prev")), "id"),
+                select=("id", "dist"),
+                cut=barrier.cut,
+                n=F.sum(F.when(F.col("dist") != F.col("prev"), 1).otherwise(0)),
             )
-            dist = barrier.cut(merged)
-            if (obs.get["n"] or 0) == 0:
+            if m["n"] == 0:
                 break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    e.unpersist()
     return dist
 
 

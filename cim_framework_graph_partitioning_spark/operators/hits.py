@@ -45,11 +45,12 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.barrier import release_checkpoint
+from ..plans.superstep import LoopScope, SuperstepRunner, loop_scope, observed_checkpoint
 
 
 def hits(
@@ -72,24 +73,17 @@ def hits(
     sc = spark.sparkContext
     p = num_blocks or auto_blocks(edges.count(), sc.defaultParallelism)
 
-    # loop-scoped conf BEFORE setup (same discipline as pagerank): the
-    # cached static tables and the init land on hash(key, p) directly
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # loop conf BEFORE setup (same discipline as pagerank): the cached
+    # static tables and the init land on hash(key, p) directly
+    with loop_scope(spark, p) as scope:
         return _hits_inner(
-            spark, edges, tol, max_iter, p, checkpoint_dir, checkpoint_every,
+            scope, edges, tol, max_iter, p, checkpoint_dir, checkpoint_every,
             resume, run_id, metrics_sink,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
 
 
 def _hits_inner(
-    spark: SparkSession,
+    scope: LoopScope,
     edges: DataFrame,
     tol: float,
     max_iter: int,
@@ -100,11 +94,11 @@ def _hits_inner(
     run_id: str,
     metrics_sink: list | None,
 ) -> tuple[DataFrame, int]:
-    verts = (
+    spark = scope.spark
+    verts = scope.cache(
         edges.select(F.col("src_id").alias("id"))
         .unionByName(edges.select(F.col("dst_id").alias("id")))
         .distinct()
-        .persist()
     )
     n = verts.count()
     if n == 0:
@@ -113,8 +107,8 @@ def _hits_inner(
     e = edges.select("src_id", "dst_id", "weight")
     # lazy caches: step 1's two matvec jobs materialize each inside the
     # job that first scans it (two eager setup counts were two extra jobs)
-    e_by_src = e.repartition(p, "src_id").persist()
-    e_by_dst = e.repartition(p, "dst_id").persist()
+    e_by_src = scope.cache(e.repartition(p, "src_id"))
+    e_by_dst = scope.cache(e.repartition(p, "dst_id"))
 
     init = verts.select(
         "id",
@@ -196,34 +190,31 @@ def _hits_inner(
         # stats agg re-executed the norm broadcast, and every later
         # consumer of the lazy scored projection re-executed it again;
         # the checkpoint pays the norm sub-job exactly once per step.
-        obs = Observation()
-        newc = (
-            scored.observe(
-                obs,
-                F.max(F.abs(F.col("hub") - F.col("prev_hub"))).alias("dh"),
-                F.max(F.abs(F.col("auth") - F.col("prev_auth"))).alias("da"),
-                F.min("na").alias("na"),
-                F.min("nt").alias("nt"),
-            )
-            .select("id", "hub", "auth")
-            .localCheckpoint(eager=True)
+        newc, m = observed_checkpoint(
+            scored,
+            select=("id", "hub", "auth"),
+            dh=F.max(F.abs(F.col("hub") - F.col("prev_hub"))),
+            da=F.max(F.abs(F.col("auth") - F.col("prev_auth"))),
+            na=F.min("na"),
+            nt=F.min("nt"),
         )
-        m = obs.get
-        na, nt = float(m["na"] or 0.0), float(m["nt"] or 0.0)
+        release_checkpoint(a_tbl)  # both consumed by the materialized newc
+        release_checkpoint(raw)
+        na, nt = m["na"], m["nt"]
         if na == 0.0 or nt == 0.0:
             # degenerate: zero scores ARE the fixpoint — converge now
             # (newc is exactly the all-zero score table: both norm
             # when-guards fell through to 0.0 for every row)
             return newc, {"max_delta": 0.0, "na": na, "nt": nt}
         return newc, {
-            "max_delta": max(float(m["dh"]), float(m["da"])),
+            "max_delta": max(m["dh"], m["da"]),
             "na": na,
             "nt": nt,
         }
 
     runner = SuperstepRunner(
         spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
+        checkpoint_every=checkpoint_every, metrics_sink=metrics_sink,
     )
     scores, steps = runner.run(
         init,
@@ -233,9 +224,4 @@ def _hits_inner(
         resume=resume,
         pre_truncated=True,  # step_fn checkpoints its own state
     )
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    verts.unpersist()
-    e_by_src.unpersist()
-    e_by_dst.unpersist()
     return scores.select("id", "hub", "auth"), steps

@@ -51,11 +51,11 @@ Scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 
 
 def undirected_edges(edges: DataFrame) -> DataFrame:
@@ -91,13 +91,9 @@ def coreness(
         edges.count(), spark.sparkContext.defaultParallelism
     )
 
-    # loop-scoped conf BEFORE setup so the cached static table and the
-    # init aggregation land on hash(key, p) partitioning directly
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # loop conf BEFORE setup so the cached static table and the init
+    # aggregation land on hash(key, p) partitioning directly
+    with loop_scope(spark, p) as scope:
         # rename once: the init state derives from the same edge plan, so
         # the per-step join would otherwise be an ambiguous self-join.
         # ONE exchange: repartition by the probe key e_u, then dedup in
@@ -106,18 +102,17 @@ def coreness(
         e = edges.select("src_id", "dst_id").filter(
             F.col("src_id") != F.col("dst_id")
         )
-        und = (
+        und = scope.cache(
             e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
             .unionByName(
                 e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
             )
             .repartition(p, "e_u")
             .dropDuplicates(["e_v", "e_u"])
-            .persist()
         )
         und.count()
 
-        # degree init: groupBy lands on hash(id, p) under the hoisted
+        # degree init: groupBy lands on hash(id, p) under the pinned
         # conf — no extra repartition needed
         init = und.groupBy(F.col("e_v").alias("id")).agg(
             F.count("*").cast("long").alias("core")
@@ -145,31 +140,21 @@ def coreness(
             )
             prev = state.select("id", F.col("core").alias("prev"))
             # ONE job per superstep: the changed-count rides the
-            # checkpoint materialization as an observed metric (same
-            # integer count the former second job computed), and the
-            # checkpointed state drops the prev column.
-            obs = Observation()
-            new_state = (
+            # checkpoint materialization, which drops the prev column
+            return observed_checkpoint(
                 prev.join(hidx.hint("shuffle_hash"), prev.id == hidx.v, "left")
                 .select(
                     "id",
                     F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("core"),
                     "prev",
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("core") != F.col("prev"), 1).otherwise(0)
-                    ).alias("chg"),
-                )
-                .select("id", "core")
-                .localCheckpoint(eager=True)
+                ),
+                select=("id", "core"),
+                changed=F.sum(F.when(F.col("core") != F.col("prev"), 1).otherwise(0)),
             )
-            return new_state, {"changed": float(obs.get["chg"] or 0)}
 
         runner = SuperstepRunner(
             spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-            checkpoint_every=checkpoint_every,
+            checkpoint_every=checkpoint_every, metrics_sink=metrics_sink,
         )
         cores, steps = runner.run(
             init,
@@ -179,10 +164,4 @@ def coreness(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    und.unpersist()
     return cores.select("id", "core"), steps

@@ -13,12 +13,12 @@ exact label parity at convergence).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 from .edges import symmetrize
 
 
@@ -38,17 +38,12 @@ def label_propagation(
     bit-for-bit across partitionings.
     """
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        und = symmetrize(edges).repartition(p, "src_id").persist()
-        verts = (
+    with loop_scope(spark, p) as scope:
+        und = scope.cache(symmetrize(edges).repartition(p, "src_id"))
+        verts = scope.cache(
             und.select(F.col("src_id").alias("id"))
             .unionByName(und.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
         init = verts.select("id", F.col("id").alias("label"))
 
@@ -68,27 +63,17 @@ def label_propagation(
                 .select("dst_id", F.col("label").alias("new_label"))
             )
             # ONE job per superstep: the changed-count rides the
-            # checkpoint materialization as an observed metric (the
-            # former separate count re-joined the old labels; prev is
-            # already in this plan)
-            obs = Observation()
-            new_labels = (
+            # checkpoint materialization (prev is already in this plan)
+            return observed_checkpoint(
                 labels.join(winner, labels.id == winner.dst_id, "left")
                 .select(
                     "id",
                     F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
                     F.col("label").alias("prev"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("label") != F.col("prev"), 1).otherwise(0)
-                    ).alias("chg"),
-                )
-                .select("id", "label")
-                .localCheckpoint(eager=True)
+                ),
+                select=("id", "label"),
+                changed=F.sum(F.when(F.col("label") != F.col("prev"), 1).otherwise(0)),
             )
-            return new_labels, {"changed": float(obs.get["chg"] or 0)}
 
         runner = SuperstepRunner(spark, checkpoint_dir=checkpoint_dir, run_id=run_id)
         labels, steps = runner.run(
@@ -96,11 +81,6 @@ def label_propagation(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
-    verts.unpersist()
     return labels, steps
 
 

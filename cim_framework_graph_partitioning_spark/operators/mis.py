@@ -36,11 +36,11 @@ the partitioner's move-coloring step uses implicitly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 
 UNDECIDED, IN_MIS, EXCLUDED = 0, 1, 2
 
@@ -77,33 +77,28 @@ def maximal_independent_set(
     p = num_blocks or auto_blocks(
         edges.count(), spark.sparkContext.defaultParallelism
     )
-    # loop-scoped conf BEFORE setup (same discipline as pagerank): the
-    # cached static table and init land on hash(key, p) partitioning and
-    # every per-step exchange is sized to the data, not the session.
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # loop conf BEFORE setup (same discipline as pagerank): the cached
+    # static table and init land on hash(key, p) partitioning and every
+    # per-step exchange is sized to the data, not the session.
+    with loop_scope(spark, p) as scope:
         # ONE exchange: repartition by the probe key e_u, dedup in place
         # (hash(e_u) clusters every (e_v, e_u) group)
         e = edges.select("src_id", "dst_id").filter(
             F.col("src_id") != F.col("dst_id")
         )
-        und = (
+        und = scope.cache(
             e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
             .unionByName(
                 e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
             )
             .repartition(p, "e_u")
             .dropDuplicates(["e_v", "e_u"])
-            .persist()
         )
         und.count()
 
         # endpoints of the RAW edge table: a vertex with only a self-loop
         # vanishes from `und` but still exists (isolated ⇒ joins the MIS);
-        # under the hoisted conf the distinct lands on hash(id, p)
+        # under the pinned conf the distinct lands on hash(id, p)
         # directly, so the former explicit repartition is gone
         verts = (
             edges.select(F.col("src_id").alias("id"))
@@ -147,8 +142,7 @@ def maximal_independent_set(
             )
             # ONE job per superstep: the undecided count rides the
             # checkpoint materialization as an observed metric
-            obs = Observation()
-            new_state = (
+            new_state, m = observed_checkpoint(
                 state.join(joiners.withColumn("_j", F.lit(1)), "id", "left")
                 .join(excluded.withColumn("_x", F.lit(1)), "id", "left")
                 .select(
@@ -159,17 +153,11 @@ def maximal_independent_set(
                     .otherwise(F.lit(UNDECIDED))
                     .cast("int")
                     .alias("status"),
-                )
-                .observe(
-                    obs,
-                    F.sum(
-                        F.when(F.col("status") == UNDECIDED, 1).otherwise(0)
-                    ).alias("undec"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                undecided=F.sum(F.when(F.col("status") == UNDECIDED, 1).otherwise(0)),
             )
             joiners.unpersist()
-            return new_state, {"undecided": float(obs.get["undec"] or 0)}
+            return new_state, m
 
         runner = SuperstepRunner(
             spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
@@ -180,10 +168,6 @@ def maximal_independent_set(
             max_iter=max_iter, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
     return (
         state.select("id", (F.col("status") == IN_MIS).alias("in_mis")),
         steps,

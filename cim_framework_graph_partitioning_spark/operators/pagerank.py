@@ -34,11 +34,6 @@ Two execution paths, identical semantics:
   per-block PARTIAL sums per dst — shuffle volume drops from one row
   per edge to one row per (block, distinct dst).
 
-* ``mode="csr_arrow"`` — same dataflow, but the per-superstep kernel is
-  ``applyInArrow`` (RecordBatch-native): the CSR list columns are read
-  as flat Arrow buffers, skipping the pandas object-array
-  materialization the csr path pays per superstep.
-
 Which is faster is MEASURED, not assumed (BENCH/CSR_CROSSOVER.md):
 csr wins ~2x in the mid-regime (~10M edges / 32 threads, skewed
 graphs); dataframe wins ~1.5x in the DRAM-bound regime (32M edges on
@@ -56,11 +51,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import LoopScope, SuperstepRunner, loop_scope, observed_checkpoint
 
 
 def pagerank_salt_col(salt_buckets: int) -> F.Column:
@@ -112,6 +107,8 @@ def pagerank(
     vector is L1-renormalized IN-PLAN (power iteration preserves sum=1,
     so the invariant must hold at step 0); an all-zero/empty init
     falls back to the uniform start."""
+    if mode not in ("dataframe", "csr"):
+        raise ValueError(f"pagerank mode must be 'dataframe' or 'csr', not {mode!r}")
     sc = spark.sparkContext
     if num_blocks is None:
         # one count of the input edge table (usually caller-cached or a
@@ -119,28 +116,21 @@ def pagerank(
         num_blocks = auto_blocks(edges.count(), sc.defaultParallelism)
     p = num_blocks
 
-    # loop-scoped conf set BEFORE the setup jobs, so the cached verts
-    # and norm tables land on hash(key, p) partitioning directly: their
+    # loop conf pinned BEFORE the setup jobs, so the cached verts and
+    # norm tables land on hash(key, p) partitioning directly: their
     # groupBy exchanges produce p partitions and the per-superstep joins
     # then reuse them with zero re-exchange (AQE off for the same reason
     # it is off inside the loop — explicit partitioning, no re-planning).
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p) as scope:
         return _pagerank_inner(
-            spark, edges, damping, tol, max_iter, mode, salted, salt_buckets,
+            scope, edges, damping, tol, max_iter, mode, salted, salt_buckets,
             p, csr_slice_edges, checkpoint_dir, checkpoint_every, resume,
             run_id, metrics_sink, sources, init_ranks,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
 
 
 def _pagerank_inner(
-    spark: SparkSession,
+    scope: LoopScope,
     edges: DataFrame,
     damping: float,
     tol: float,
@@ -158,6 +148,7 @@ def _pagerank_inner(
     sources: DataFrame | None,
     init_ranks: DataFrame | None,
 ) -> tuple[DataFrame, int]:
+    spark = scope.spark
     # verts + has_out in ONE aggregation pass (one exchange, map-side
     # combined): endpoint rows tagged is_src, max(is_src) per id — the
     # former distinct-union-distinct-join chain paid three exchanges for
@@ -175,7 +166,7 @@ def _pagerank_inner(
         )
     else:
         verts = verts.select("id", "has_out", F.lit(True).alias("in_s"))
-    verts = verts.persist()
+    verts = scope.cache(verts)
     n = verts.count()
     if n == 0:
         return spark.createDataFrame([], "id long, rank double"), 0
@@ -196,19 +187,18 @@ def _pagerank_inner(
         "dst_id",
         (F.col("weight") / F.sum("weight").over(Window.partitionBy("src_id"))).alias("frac"),
     )
-    if mode in ("csr", "csr_arrow"):
+    if mode == "csr":
         # hash-partition the (static, large) block table by its cogroup
         # key ONCE: the per-superstep cogroup then reuses this exchange
         # and only the rank side shuffles — the same static-side rule
         # the dataframe path follows.
-        blocks = (
+        blocks = scope.cache(
             _pack_csr_blocks(norm, p, max_edges_per_slice=csr_slice_edges)
             .repartition(p, "block")
-            .persist()
         )
         blocks.count()
     else:
-        norm = norm.persist()
+        norm = scope.cache(norm)
         norm.count()
 
     # state schema: (id, rank, has_out, in_s) — has_out/in_s ride IN the
@@ -245,23 +235,9 @@ def _pagerank_inner(
             "in_s",
         )
 
-    import os as _os
-    import time as _time
-    _trace = _os.environ.get("PAGERANK_TRACE") == "1"
-
     def step_fn(ranks: DataFrame, step: int):
-        _t = _time.monotonic()
-
-        def _mark(label):
-            nonlocal _t
-            if _trace:
-                now = _time.monotonic()
-                print(f"    step {step} {label}: {now - _t:.2f}s", flush=True)
-                _t = now
         if mode == "csr":
             sums = _csr_contributions(ranks.select("id", "rank"), blocks, p)
-        elif mode == "csr_arrow":
-            sums = _csr_contributions_arrow(ranks.select("id", "rank"), blocks, p)
         else:
             # shuffle-hash, not sort-merge: the cached edge table must
             # not be re-sorted every superstep (measured 1.8x/step), and
@@ -329,35 +305,24 @@ def _pagerank_inner(
                 F.col("rank").alias("prev"),
             )
         )
-        _mark("plan_build")
         # ONE job per superstep: the convergence stats ride the
         # checkpoint materialization as observed metrics (max/sum are
         # the same aggregates the former second job computed), and the
         # checkpointed state drops the prev column.
-        obs = Observation()
-        newc = (
-            new_ranks.observe(
-                obs,
-                F.max(F.abs(F.col("rank") - F.col("prev"))).alias("d"),
-                F.sum(
-                    F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            )
-            .select("id", "rank", "has_out", "in_s")
-            .localCheckpoint(eager=True)
-        )
-        m = obs.get
-        _mark("localCheckpoint+stats")
-        return (
-            newc,
-            {"max_delta": float(m["d"]), "dangling_mass": float(m["dm"] or 0.0)},
+        return observed_checkpoint(
+            new_ranks,
+            select=("id", "rank", "has_out", "in_s"),
+            max_delta=F.max(F.abs(F.col("rank") - F.col("prev"))),
+            dangling_mass=F.sum(
+                F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)
+            ),
         )
 
     runner = SuperstepRunner(
         spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
+        checkpoint_every=checkpoint_every, metrics_sink=metrics_sink,
     )
-    # AQE off + shuffle partitions = p for setup AND loop: hoisted to
+    # AQE off + shuffle partitions = p for setup AND loop: pinned in
     # pagerank() so the cached static tables and every per-superstep
     # exchange share the same explicit hash(key, p) partitioning (the
     # per-superstep groupBy/join exchanges would otherwise fan out to
@@ -372,10 +337,6 @@ def _pagerank_inner(
         resume=resume,
         pre_truncated=True,
     )
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    verts.unpersist()
-    (blocks if mode in ("csr", "csr_arrow") else norm).unpersist()
     return ranks.select("id", "rank"), steps
 
 
@@ -465,63 +426,5 @@ def _csr_contributions(ranks: DataFrame, blocks: DataFrame, p: int) -> DataFrame
         ranks_b.groupBy("block")
         .cogroup(blocks.groupBy("block"))
         .applyInPandas(kernel, "dst_id long, s double")
-    )
-    return partial.groupBy("dst_id").agg(F.sum("s").alias("s"))
-
-
-def _csr_contributions_arrow(ranks: DataFrame, blocks: DataFrame, p: int) -> DataFrame:
-    """Arrow-native CSR kernel: cogroup(...).applyInArrow consumes the
-    RecordBatches directly (no pandas materialization of the list
-    columns — the hop BENCH/CSR_CROSSOVER.md measured as the csr path's
-    cost in the DRAM-bound regime). List columns are flattened ONCE per
-    call via ListArray.values/offsets; all math runs on the flat numpy
-    views."""
-    import pyarrow as pa
-
-    empty = pa.schema([("dst_id", pa.int64()), ("s", pa.float64())])
-
-    def kernel(key, rank_tbl: pa.Table, block_tbl: pa.Table) -> pa.Table:
-        if rank_tbl.num_rows == 0 or block_tbl.num_rows == 0:
-            return empty.empty_table()
-        rid = rank_tbl.column("id").to_numpy()
-        rv = rank_tbl.column("rank").to_numpy()
-        order = np.argsort(rid, kind="mergesort")
-        rid_s, rv_s = rid[order], rv[order]
-
-        def flat(col):
-            c = block_tbl.column(col).combine_chunks()
-            return c.values.to_numpy(zero_copy_only=False), c.offsets.to_numpy()
-
-        src_v, src_o = flat("src_ids")
-        ind_v, ind_o = flat("indptr")
-        dst_v, _ = flat("dst_ids")
-        frac_v, _ = flat("frac")
-        # per-src edge counts: within each slice row, diff(indptr); the
-        # concatenation order of src/dst/frac values matches row order,
-        # so per-edge expansion can run on the flat arrays in one pass.
-        counts = np.diff(ind_v)
-        keep = np.ones(len(counts), dtype=bool)
-        keep[ind_o[1:-1] - 1] = False  # drop the seams between rows
-        counts = counts[keep]
-        pos = np.searchsorted(rid_s, src_v)
-        per_edge = np.repeat(rv_s[pos], counts) * frac_v
-        udst, inv = np.unique(dst_v, return_inverse=True)
-        s = np.bincount(inv, weights=per_edge, minlength=len(udst))
-        out = pa.table({"dst_id": pa.array(udst, pa.int64()),
-                        "s": pa.array(s, pa.float64())})
-        # Reused python workers accumulate RSS across supersteps: the
-        # Arrow memory pool RETAINS the per-call list-column copies
-        # (measured: per-step time grew 8.5 -> 141.8s within one 32M-edge
-        # run; spark.python.worker.reuse=false made it stable). Hand the
-        # freed buffers back to the OS before returning.
-        del src_v, ind_v, dst_v, frac_v, per_edge, counts, pos, inv
-        pa.default_memory_pool().release_unused()
-        return out
-
-    ranks_b = ranks.withColumn("block", F.pmod(F.xxhash64("id"), F.lit(p)).cast("int"))
-    partial = (
-        ranks_b.groupBy("block")
-        .cogroup(blocks.groupBy("block"))
-        .applyInArrow(kernel, "dst_id long, s double")
     )
     return partial.groupBy("dst_id").agg(F.sum("s").alias("s"))

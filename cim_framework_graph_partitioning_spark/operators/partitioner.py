@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier, release_checkpoint
 from ..plans.scale import auto_blocks
+from ..plans.superstep import loop_scope
 from .edges import symmetrize
 
 
@@ -187,26 +188,21 @@ def balanced_partition(
         raise ValueError(f"objective_mode must be one of {OBJECTIVE_MODES}")
     alpha = _cut_scale(objective_mode)
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    # loop-scoped conf BEFORE setup (same discipline as pagerank): the
-    # cached edge table, the init assignment and the init objective all
-    # run on hash(key, p) partitioning instead of the session's global
-    # shuffle partitions.
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # loop conf BEFORE setup (same discipline as pagerank): the cached
+    # edge table, the init assignment and the init objective all run on
+    # hash(key, p) partitioning instead of the session's global shuffle
+    # partitions.
+    with loop_scope(spark, p) as scope:
         # cached by DST_ID — the key of the only per-round join that
         # touches the full edge table (the assignment-label join below);
         # the former src_id cache forced a full edge re-exchange EVERY
         # round (guide §2.4: two operations keyed the same way share one
         # exchange).
-        und = symmetrize(edges).repartition(p, "dst_id").persist()
-        verts = (
+        und = scope.cache(symmetrize(edges).repartition(p, "dst_id"))
+        verts = scope.cache(
             und.select(F.col("src_id").alias("id"))
             .unionByName(und.select(F.col("dst_id").alias("id")))
             .distinct()
-            .persist()
         )
 
         barrier = PlanBarrier(spark, tag="partitioner")
@@ -388,13 +384,8 @@ def balanced_partition(
         final_obj, final_cut, final_ssq = exact_objective(
             und, best, lam, objective_mode, pipeline_batch, k=k
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    history[-1]["objective_recomputed"] = final_obj
-    assert abs(final_obj - best_obj) < 1e-6 * max(1.0, abs(final_obj)), (
-        f"incremental objective drifted: {best_obj} vs {final_obj}"
-    )
-    und.unpersist()
-    verts.unpersist()
+        history[-1]["objective_recomputed"] = final_obj
+        assert abs(final_obj - best_obj) < 1e-6 * max(1.0, abs(final_obj)), (
+            f"incremental objective drifted: {best_obj} vs {final_obj}"
+        )
     return best, history

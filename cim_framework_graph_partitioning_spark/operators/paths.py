@@ -32,11 +32,11 @@ Scale shape (same discipline as pagerank.py/kcore.py):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 
 
 def shortest_paths(
@@ -67,73 +67,64 @@ def shortest_paths(
     if neg:
         raise ValueError("shortest_paths requires non-negative weights")
 
-    e = (
-        edges.select("src_id", "dst_id", "weight")
-        .repartition(p, "src_id")
-        .persist()
-    )
-    e.count()
-
-    verts = (
-        e.select(F.col("src_id").alias("id"))
-        .unionByName(e.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
-    s = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
-    # init: 0.0 at sources present in the graph, NULL elsewhere; every
-    # source starts in the frontier (changed=true)
-    init = (
-        verts.join(s.withColumn("_s", F.lit(True)), "id", "left")
-        .select(
-            "id",
-            F.when(F.col("_s"), F.lit(0.0)).otherwise(F.lit(None).cast("double")).alias("dist"),
-            F.coalesce(F.col("_s"), F.lit(False)).alias("changed"),
+    # the loop conf is pinned only after setup, which runs under the
+    # session conf
+    with loop_scope(spark) as scope:
+        e = scope.cache(
+            edges.select("src_id", "dst_id", "weight").repartition(p, "src_id")
         )
-        .repartition(p, "id")
-    )
+        e.count()
 
-    def step_fn(state: DataFrame, step: int):
-        # only last step's frontier relaxes (delta Bellman-Ford)
-        frontier = state.filter(F.col("changed")).select("id", "dist")
-        cand = (
-            frontier.hint("shuffle_hash")
-            .join(e, frontier.id == e.src_id)
-            .groupBy("dst_id")
-            .agg(F.min(F.col("dist") + F.col("weight")).alias("cand"))
+        verts = (
+            e.select(F.col("src_id").alias("id"))
+            .unionByName(e.select(F.col("dst_id").alias("id")))
+            .distinct()
         )
-        prev = state.select("id", F.col("dist").alias("prev"))
-        # ONE job per superstep: the changed-count rides the checkpoint
-        # materialization as an observed metric (pagerank pattern), and
-        # the checkpointed state drops the prev column
-        obs = Observation()
-        new_state = (
-            prev.join(cand.hint("shuffle_hash"), prev.id == cand.dst_id, "left")
+        s = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
+        # init: 0.0 at sources present in the graph, NULL elsewhere; every
+        # source starts in the frontier (changed=true)
+        init = (
+            verts.join(s.withColumn("_s", F.lit(True)), "id", "left")
             .select(
                 "id",
-                F.least(F.col("prev"), F.col("cand")).alias("dist"),
-                # least() is null-safe on one side: least(null, x) = x
-                (
-                    F.col("cand").isNotNull()
-                    & (F.col("prev").isNull() | (F.col("cand") < F.col("prev")))
-                ).alias("changed"),
+                F.when(F.col("_s"), F.lit(0.0)).otherwise(F.lit(None).cast("double")).alias("dist"),
+                F.coalesce(F.col("_s"), F.lit(False)).alias("changed"),
             )
-            .observe(
-                obs,
-                F.sum(F.when(F.col("changed"), 1).otherwise(0)).alias("n"),
-            )
-            .localCheckpoint(eager=True)
+            .repartition(p, "id")
         )
-        return new_state, {"changed": float(obs.get["n"] or 0)}
 
-    runner = SuperstepRunner(
-        spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
-    )
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+        def step_fn(state: DataFrame, step: int):
+            # only last step's frontier relaxes (delta Bellman-Ford)
+            frontier = state.filter(F.col("changed")).select("id", "dist")
+            cand = (
+                frontier.hint("shuffle_hash")
+                .join(e, frontier.id == e.src_id)
+                .groupBy("dst_id")
+                .agg(F.min(F.col("dist") + F.col("weight")).alias("cand"))
+            )
+            prev = state.select("id", F.col("dist").alias("prev"))
+            # ONE job per superstep: the changed-count rides the checkpoint
+            # materialization as an observed metric (pagerank pattern), and
+            # the checkpointed state drops the prev column
+            return observed_checkpoint(
+                prev.join(cand.hint("shuffle_hash"), prev.id == cand.dst_id, "left")
+                .select(
+                    "id",
+                    F.least(F.col("prev"), F.col("cand")).alias("dist"),
+                    # least() is null-safe on one side: least(null, x) = x
+                    (
+                        F.col("cand").isNotNull()
+                        & (F.col("prev").isNull() | (F.col("cand") < F.col("prev")))
+                    ).alias("changed"),
+                ),
+                changed=F.sum(F.when(F.col("changed"), 1).otherwise(0)),
+            )
+
+        runner = SuperstepRunner(
+            spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
+            checkpoint_every=checkpoint_every, metrics_sink=metrics_sink,
+        )
+        scope.pin(p)
         out, steps = runner.run(
             init,
             step_fn,
@@ -142,10 +133,4 @@ def shortest_paths(
             resume=resume,
             pre_truncated=True,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
-    e.unpersist()
     return out.select("id", "dist"), steps

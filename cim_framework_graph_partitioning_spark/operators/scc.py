@@ -61,11 +61,12 @@ naively):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.barrier import PlanBarrier
+from ..plans.barrier import PlanBarrier, release_checkpoint
 from ..plans.scale import auto_blocks
+from ..plans.superstep import LoopScope, loop_scope, observed_checkpoint
 
 
 def strongly_connected_components(
@@ -82,44 +83,35 @@ def strongly_connected_components(
     scc_id = min id in the vertex's strongly connected component.
     Self-loops don't affect the decomposition (a self-loop-only vertex
     is its own singleton SCC)."""
-    # vertex set from the UNFILTERED edges (self-loop-only vertices
-    # must still appear, as singletons); the working edge table drops
-    # self-loops (they never change strong connectivity).
-    e_all = (
-        edges.select("src_id", "dst_id")
-        .filter(F.col("src_id") != F.col("dst_id"))
-        .distinct()
-        .persist()
-    )
-    verts = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
-    p = num_blocks or auto_blocks(
-        verts.count(),
-        spark.sparkContext.defaultParallelism,
-        rows_per_block=rows_per_block,
-    )
-    remaining = verts.repartition(p, "id").localCheckpoint(eager=True)
-
-    # loop-scoped: AQE off (per-iteration driver replanning, measured
-    # 2.3x/step on the pagerank loop) and shuffle partitions = p (the
-    # fixpoint joins otherwise exchange at the session-global count —
-    # pure task overhead for a small remainder graph). Restored on exit.
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
-        result = _scc_rounds(
-            spark, e_all, remaining, max_rounds, max_iter, p, salt, fuse_steps
+    with loop_scope(spark) as scope:
+        # vertex set from the UNFILTERED edges (self-loop-only vertices
+        # must still appear, as singletons); the working edge table drops
+        # self-loops (they never change strong connectivity).
+        e_all = scope.cache(
+            edges.select("src_id", "dst_id")
+            .filter(F.col("src_id") != F.col("dst_id"))
+            .distinct()
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
+        verts = (
+            edges.select(F.col("src_id").alias("id"))
+            .unionByName(edges.select(F.col("dst_id").alias("id")))
+            .distinct()
+        )
+        p = num_blocks or auto_blocks(
+            verts.count(),
+            spark.sparkContext.defaultParallelism,
+            rows_per_block=rows_per_block,
+        )
+        remaining = scope.checkpoint(verts.repartition(p, "id"))
 
-    e_all.unpersist()
+        # loop conf: AQE off (per-iteration driver replanning, measured
+        # 2.3x/step on the pagerank loop) and shuffle partitions = p (the
+        # fixpoint joins otherwise exchange at the session-global count —
+        # pure task overhead for a small remainder graph)
+        scope.pin(p)
+        result = _scc_rounds(
+            scope, e_all, remaining, max_rounds, max_iter, p, salt, fuse_steps
+        )
     if result is None:
         return spark.createDataFrame([], "id long, scc_id long")
     # relabel: scc_id = min member id (algorithm-independent contract)
@@ -128,7 +120,7 @@ def strongly_connected_components(
 
 
 def _scc_rounds(
-    spark: SparkSession,
+    scope: LoopScope,
     e_all: DataFrame,
     remaining: DataFrame,
     max_rounds: int,
@@ -137,9 +129,9 @@ def _scc_rounds(
     salt: int,
     fuse_steps: int,
 ) -> DataFrame | None:
-    """The peel loop of strongly_connected_components (split out so the
-    caller can scope loop-wide session conf around it)."""
-    barrier = PlanBarrier(spark, tag="scc")
+    """The peel loop of strongly_connected_components. Its per-round
+    checkpoints are owned by ``scope``; only the returned result is not."""
+    barrier = PlanBarrier(scope.spark, tag="scc")
     result: DataFrame | None = None
     rounds = 0
     while remaining.limit(1).count() > 0:
@@ -174,9 +166,9 @@ def _scc_rounds(
             F.xxhash64(F.col("id"), F.lit(salt)).alias("h"),
             F.col("id").alias("i"),
         )
-        color = remaining.select(
+        color = scope.checkpoint(remaining.select(
             "id", own_color.alias("color"), F.lit(True).alias("chg")
-        ).localCheckpoint(eager=True)
+        ))
 
         def color_step(state: DataFrame) -> DataFrame:
             frontier = state.filter(F.col("chg")).select("id", "color")
@@ -205,12 +197,10 @@ def _scc_rounds(
             # ONE job per segment: the changed-count rides the barrier
             # cut's materialization as an observed metric (the former
             # persist+count+cut pair materialized the segment twice)
-            obs = Observation()
-            seg = seg.observe(
-                obs, F.sum(F.when(F.col("chg"), 1).otherwise(0)).alias("n")
+            color, m = observed_checkpoint(
+                seg, cut=barrier.cut, n=F.sum(F.when(F.col("chg"), 1).otherwise(0))
             )
-            color = barrier.cut(seg)
-            if (obs.get["n"] or 0) == 0:
+            if m["n"] == 0:
                 break
         else:
             raise RuntimeError("scc: color propagation did not converge")
@@ -222,12 +212,12 @@ def _scc_rounds(
         # (same trick as paths.py's delta Bellman-Ford): only marks
         # gained LAST iteration propagate, so total backward-join work
         # is one pass over each SCC's in-edges, not diameter passes.
-        reach = color.select(
+        reach = scope.checkpoint(color.select(
             "id",
             "color",
             (own_color == F.col("color")).alias("in_scc"),
             (own_color == F.col("color")).alias("frontier"),
-        ).localCheckpoint(eager=True)
+        ))
         def reach_step(state: DataFrame) -> DataFrame:
             marked = state.filter(F.col("frontier")).select(
                 F.col("id").alias("m_id"), F.col("color").alias("m_color")
@@ -261,25 +251,24 @@ def _scc_rounds(
             seg = reach
             for _b in range(fuse_steps):
                 seg = reach_step(seg)
-            obs = Observation()
-            seg = seg.observe(
-                obs,
-                F.sum(F.when(F.col("frontier"), 1).otherwise(0)).alias("n"),
+            reach, m = observed_checkpoint(
+                seg, cut=barrier.cut,
+                n=F.sum(F.when(F.col("frontier"), 1).otherwise(0)),
             )
-            reach = barrier.cut(seg)
-            if (obs.get["n"] or 0) == 0:
+            if m["n"] == 0:
                 break
         else:
             raise RuntimeError("scc: backward reachability did not converge")
 
-        chunk = reach.filter(F.col("in_scc")).select("id", "color")
-        chunk = chunk.localCheckpoint(eager=True)
+        scope.own(reach)  # the last cut stays live in the barrier
+        chunk = scope.checkpoint(reach.filter(F.col("in_scc")).select("id", "color"))
+        superseded = result
         result = chunk if result is None else result.unionByName(chunk)
         result = result.localCheckpoint(eager=True)
-        remaining = (
+        release_checkpoint(superseded)
+        remaining = scope.checkpoint(
             remaining.join(chunk.select("id"), "id", "left_anti")
             .repartition(p, "id")
-            .localCheckpoint(eager=True)
         )
         er.unpersist()
         er_by_dst.unpersist()

@@ -149,30 +149,11 @@ def neighborhood_sketches(
     """
     from ..plans.barrier import release_checkpoint
     from ..plans.scale import auto_blocks
+    from ..plans.superstep import loop_scope
     from .kcore import undirected_edges
 
     p = num_blocks or auto_blocks(
         edges.count(), spark.sparkContext.defaultParallelism
-    )
-    und = (
-        undirected_edges(edges)
-        .select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
-        .repartition(p, "e_u")
-        .persist()
-    )
-    und.count()
-    verts = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
-    state = (
-        verts.select(
-            "id",
-            F.array(_id_hash(F.col("id"), seed, hash_family)).alias("sk"),
-        )
-        .repartition(p, "id")
-        .localCheckpoint(eager=True)
     )
 
     def merge_col(col: F.Column) -> F.Column:
@@ -180,9 +161,27 @@ def neighborhood_sketches(
             F.array_distinct(F.array_sort(F.flatten(col))), 1, k
         )
 
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark) as scope:
+        und = scope.cache(
+            undirected_edges(edges)
+            .select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
+            .repartition(p, "e_u")
+        )
+        und.count()
+        verts = (
+            edges.select(F.col("src_id").alias("id"))
+            .unionByName(edges.select(F.col("dst_id").alias("id")))
+            .distinct()
+        )
+        state = (
+            verts.select(
+                "id",
+                F.array(_id_hash(F.col("id"), seed, hash_family)).alias("sk"),
+            )
+            .repartition(p, "id")
+            .localCheckpoint(eager=True)
+        )
+        scope.pin(p, pin_aqe=False)
         for _round in range(t):
             s = state.hint("shuffle_hash")
             nbr = s.join(und, s.id == und.e_u).select(
@@ -204,9 +203,6 @@ def neighborhood_sketches(
             new_state = merged.localCheckpoint(eager=True)
             release_checkpoint(state)
             state = new_state
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
 
     n_sk = F.size("sk")
     kth = F.when(n_sk >= k, F.element_at("sk", k))

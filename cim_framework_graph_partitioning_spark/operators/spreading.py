@@ -23,11 +23,11 @@ is exchanged once; only the state shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 
 
 def label_spreading(
@@ -57,26 +57,19 @@ def label_spreading(
     sc = spark.sparkContext
     p = num_blocks or auto_blocks(edges.count(), sc.defaultParallelism)
 
-    # loop-scoped conf BEFORE setup; caches released in the finally
-    # (they used to leak on a runner exception — ADVICE r5)
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    # loop conf BEFORE setup
+    with loop_scope(spark, p) as scope:
         return _label_spreading_inner(
-            spark, edges, seeds, alpha, tol, max_iter, p, checkpoint_dir,
+            scope, edges, seeds, alpha, tol, max_iter, p, checkpoint_dir,
             checkpoint_every, resume, run_id, metrics_sink,
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
 
 
 def _label_spreading_inner(
-    spark, edges, seeds, alpha, tol, max_iter, p, checkpoint_dir,
+    scope, edges, seeds, alpha, tol, max_iter, p, checkpoint_dir,
     checkpoint_every, resume, run_id, metrics_sink,
 ):
+    spark = scope.spark
     e = edges.filter(F.col("src_id") != F.col("dst_id")).select(
         F.least("src_id", "dst_id").alias("a"),
         F.greatest("src_id", "dst_id").alias("b"),
@@ -92,7 +85,7 @@ def _label_spreading_inner(
     )
     # S = D^-1/2 W D^-1/2, cached partitioned by src (the join key of
     # the propagation half-step) — built once, never re-exchanged
-    norm = (
+    norm = scope.cache(
         und.join(deg.select(F.col("id").alias("src_id"),
                             F.col("d").alias("d_src")), "src_id")
         .join(deg.select(F.col("id").alias("dst_id"),
@@ -102,7 +95,6 @@ def _label_spreading_inner(
             (F.col("w") / F.sqrt(F.col("d_src") * F.col("d_dst"))).alias("s"),
         )
         .repartition(p, "src_id")
-        .persist()
     )
     norm.count()
 
@@ -111,7 +103,7 @@ def _label_spreading_inner(
         .unionByName(edges.select(F.col("dst_id").alias("id")))
         .distinct()
     )
-    y = (
+    y = scope.cache(
         seeds.select(
             F.col(seeds.columns[0]).alias("id"),
             F.col(seeds.columns[1]).alias("label"),
@@ -120,7 +112,6 @@ def _label_spreading_inner(
         .join(verts, "id", "left_semi")
         .select("id", "label", F.lit(1.0).alias("y"))
         .repartition(p, "id")
-        .persist()
     )
     if y.count() == 0:
         return (
@@ -140,7 +131,9 @@ def _label_spreading_inner(
             .groupBy("id", "label")
             .agg(F.sum("c").alias("prop"))
         )
-        new = (
+        # delta rides the checkpoint as an observed metric — the former
+        # separate stats job per superstep is gone (pagerank pattern)
+        return observed_checkpoint(
             prop.join(y.hint("shuffle_hash"), ["id", "label"], "full_outer")
             .select(
                 "id", "label",
@@ -154,37 +147,23 @@ def _label_spreading_inner(
                     "id", "label", F.col("score").alias("prev")
                 ).hint("shuffle_hash"),
                 ["id", "label"], "left",
-            )
-            .observe(
-                obs := Observation(),
-                F.max(
-                    F.abs(F.col("score") - F.coalesce(F.col("prev"), F.lit(0.0)))
-                ).alias("d"),
-            )
-            .select("id", "label", "score")
-            .localCheckpoint(eager=True)
+            ),
+            select=("id", "label", "score"),
+            max_delta=F.max(
+                F.abs(F.col("score") - F.coalesce(F.col("prev"), F.lit(0.0)))
+            ),
         )
-        # delta rides the checkpoint as an observed metric — the former
-        # separate stats job per superstep is gone (pagerank pattern)
-        return new, {"max_delta": float(obs.get["d"] or 0.0)}
 
     runner = SuperstepRunner(
         spark, checkpoint_dir=checkpoint_dir, run_id=run_id,
-        checkpoint_every=checkpoint_every,
+        checkpoint_every=checkpoint_every, metrics_sink=metrics_sink,
     )
-    try:
-        scores, steps = runner.run(
-            init,
-            step_fn,
-            converged=lambda m: m["max_delta"] < tol,
-            max_iter=max_iter,
-            resume=resume,
-            pre_truncated=True,
-        )
-    finally:
-        # release the static caches even on a runner exception
-        norm.unpersist()
-        y.unpersist()
-    if metrics_sink is not None:
-        metrics_sink.extend(runner.history)
+    scores, steps = runner.run(
+        init,
+        step_fn,
+        converged=lambda m: m["max_delta"] < tol,
+        max_iter=max_iter,
+        resume=resume,
+        pre_truncated=True,
+    )
     return scores.select("id", "label", "score"), steps

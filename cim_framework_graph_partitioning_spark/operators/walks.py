@@ -36,10 +36,11 @@ Scale shape:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
+from ..plans.superstep import observed_checkpoint
 
 
 def _step_hash(step: int, seed: int, hash_family: str) -> F.Column:
@@ -122,14 +123,12 @@ def random_walks(
         pick = F.pmod(_step_hash(step, seed, hash_family), F.col("deg"))
         # live-walk count rides the checkpoint as an observed metric —
         # the former limit(1).count() early-exit probe job is gone
-        obs = Observation()
-        nxt = (
+        nxt, m = observed_checkpoint(
             cur.hint("shuffle_hash")
             .join(adj, cur.cur == adj.src_id)
             .filter(F.col("rank") == pick)
-            .select("start_id", "walk_no", F.col("dst_id").alias("cur"))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("start_id", "walk_no", F.col("dst_id").alias("cur")),
+            n=F.count(F.lit(1)),
         )
         out = out.unionByName(
             nxt.select(
@@ -138,7 +137,7 @@ def random_walks(
             )
         )
         cur = nxt
-        if (obs.get["n"] or 0) == 0:
+        if m["n"] == 0:
             break
 
     adj.unpersist()
@@ -259,7 +258,7 @@ def biased_walks(
         if step == 1:
             # no prev yet: uniform first-order rank selection
             pick = F.pmod(_step_hash(step, seed, hash_family), F.col("deg"))
-            nxt = (
+            nxt, m = observed_checkpoint(
                 cur.hint("shuffle_hash")
                 .join(adj, cur.cur == adj.src_id)
                 .filter(F.col("rank") == pick)
@@ -267,9 +266,8 @@ def biased_walks(
                     "start_id", "walk_no",
                     F.col("cur").alias("prev"),
                     F.col("dst_id").alias("cur"),
-                )
-                .observe(obs := Observation(), F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+                ),
+                n=F.count(F.lit(1)),
             )
         else:
             cand = (
@@ -298,7 +296,7 @@ def biased_walks(
                 F.col("tot") > 0,
                 F.pmod(_step_hash2(step, seed, hash_family), F.col("tot")),
             )
-            nxt = (
+            nxt, m = observed_checkpoint(
                 cand.withColumn("cum", F.sum("wgt").over(w_cum))
                 .withColumn("tot", F.sum("wgt").over(w_tot))
                 .filter((F.col("cum") - F.col("wgt") <= r) & (r < F.col("cum")))
@@ -306,9 +304,8 @@ def biased_walks(
                     "start_id", "walk_no",
                     F.col("cur").alias("prev"),
                     F.col("dst_id").alias("cur"),
-                )
-                .observe(obs := Observation(), F.count(F.lit(1)).alias("n"))
-                .localCheckpoint(eager=True)
+                ),
+                n=F.count(F.lit(1)),
             )
         out = out.unionByName(
             nxt.select(
@@ -318,7 +315,7 @@ def biased_walks(
         )
         cur = nxt
         # live-walk count observed on the checkpoint (no probe job)
-        if (obs.get["n"] or 0) == 0:
+        if m["n"] == 0:
             break
 
     adj.unpersist()

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner
+from ..plans.superstep import SuperstepRunner, loop_scope
 
 _MOD = 1 << 60
 
@@ -73,24 +73,19 @@ def wl_refinement(
     p = num_blocks or auto_blocks(
         edges.count(), spark.sparkContext.defaultParallelism
     )
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled")
-    shuf_was = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(p))
-    try:
+    with loop_scope(spark, p) as scope:
         # ONE exchange: repartition by the probe key e_u, dedup in place
         # (hash(e_u) clusters every (e_v, e_u) group — kcore pattern)
         e = edges.select("src_id", "dst_id").filter(
             F.col("src_id") != F.col("dst_id")
         )
-        und = (
+        und = scope.cache(
             e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
             .unionByName(
                 e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
             )
             .repartition(p, "e_u")
             .dropDuplicates(["e_v", "e_u"])
-            .persist()
         )
         und.count()
 
@@ -162,8 +157,4 @@ def wl_refinement(
             init, step_fn, converged=stable, max_iter=bound, resume=resume,
             pre_truncated=True,  # step_fn checkpoints its own state
         )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", shuf_was)
-    und.unpersist()
     return state.select("id", "color"), steps

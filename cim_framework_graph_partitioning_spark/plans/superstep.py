@@ -35,12 +35,127 @@ resumable).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .barrier import PlanBarrier, checkpoint_leaf_ids, release_checkpoint
+
+_AQE = "spark.sql.adaptive.enabled"
+_SHUFFLE = "spark.sql.shuffle.partitions"
+
+
+def _persisted_rdds(spark: SparkSession):
+    return spark.sparkContext._jsc.getPersistentRDDs()
+
+
+class LoopScope:
+    """What one iterative operator call owns on its session: the loop
+    conf it pinned, and the setup caches and checkpoints it registered.
+    Created by ``loop_scope``, which releases all of it on exit."""
+
+    def __init__(self, spark: SparkSession) -> None:
+        self.spark = spark
+        self._saved_conf: dict[str, str] = {}
+        self._cached: list[DataFrame] = []
+        self._checkpoints: list[tuple[DataFrame, frozenset[int]]] = []
+        self._rdds_at_entry = set(_persisted_rdds(spark).keySet())
+
+    def pin(self, p: int, pin_aqe: bool = True) -> None:
+        """Loop conf: ``shuffle.partitions = p`` so every exchange of the
+        loop lands on hash(key, p), and AQE off (explicit partitioning,
+        no per-step re-planning) unless ``pin_aqe=False``. The values
+        seen before the first pin are restored at scope exit."""
+        pins = {_SHUFFLE: str(p)}
+        if pin_aqe:
+            pins[_AQE] = "false"
+        for key, value in pins.items():
+            self._saved_conf.setdefault(key, self.spark.conf.get(key))
+            self.spark.conf.set(key, value)
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        """``df.persist()``, unpersisted at scope exit."""
+        df = df.persist()
+        self._cached.append(df)
+        return df
+
+    def own(self, df: DataFrame, protect: frozenset[int] = frozenset()) -> DataFrame:
+        """Register a checkpointed frame: the checkpoint RDDs its plan
+        reads, except ``protect``, are released at scope exit. Never
+        register the frame the operator returns, nor one it reads."""
+        self._checkpoints.append((df, protect))
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """``df.localCheckpoint(eager=True)``, released at scope exit."""
+        return self.own(df.localCheckpoint(eager=True))
+
+    def _close(self, failed: bool) -> None:
+        try:
+            for df in self._cached:
+                df.unpersist()
+            for df, protect in self._checkpoints:
+                release_checkpoint(df, protect=protect)
+            if failed:
+                # a failed call returns nothing, so every RDD it left
+                # persisted is an orphan: a step's checkpoint, a barrier
+                # cut, or the localCheckpoint of the job that failed
+                # (registered before its job ran, never handed back)
+                live = _persisted_rdds(self.spark)
+                for rdd_id in set(live.keySet()) - self._rdds_at_entry:
+                    rdd = live.get(rdd_id)
+                    if rdd is not None:  # the map drops GC'd entries
+                        rdd.unpersist(False)
+        finally:
+            for key, value in self._saved_conf.items():
+                self.spark.conf.set(key, value)
+
+
+@contextmanager
+def loop_scope(
+    spark: SparkSession, p: int | None = None, pin_aqe: bool = True
+) -> Iterator[LoopScope]:
+    """The session state one iterative operator call owns.
+
+    ``p`` pins the loop conf at entry (``LoopScope.pin``); an operator
+    whose setup must run under the session conf passes no ``p`` and
+    pins after setup. Setup caches and checkpoints registered with the
+    scope are released at exit and the conf is restored, on success
+    and on exception. On exception every RDD persisted since entry is
+    released too, which includes an input the caller cached lazily and
+    the call materialized first (it stays correct, only uncached). Like
+    the conf pin itself, this assumes one loop at a time per session."""
+    scope = LoopScope(spark)
+    try:
+        if p is not None:
+            scope.pin(p, pin_aqe)
+        yield scope
+    except BaseException:
+        scope._close(failed=True)
+        raise
+    scope._close(failed=False)
+
+
+def observed_checkpoint(
+    df: DataFrame,
+    select: tuple[str, ...] | None = None,
+    cut: Callable[[DataFrame], DataFrame] | None = None,
+    **metrics: Column,
+) -> tuple[DataFrame, dict[str, float]]:
+    """Materialize ``df`` with ``metrics`` riding the same job as
+    observed aggregates: observe, then the optional column ``select``,
+    then ``cut`` (default ``localCheckpoint(eager=True)``; a
+    ``PlanBarrier.cut`` also works). One Spark job, no separate stats
+    scan. Returns (materialized frame, {name: value}); an aggregate over
+    no rows reads 0.0."""
+    obs = Observation()
+    out = df.observe(obs, *(col.alias(name) for name, col in metrics.items()))
+    if select is not None:
+        out = out.select(*select)
+    out = cut(out) if cut is not None else out.localCheckpoint(eager=True)
+    return out, {name: float(v or 0) for name, v in obs.get.items()}
 
 
 class SuperstepRunner:
@@ -50,12 +165,14 @@ class SuperstepRunner:
         checkpoint_dir: str | None = None,
         run_id: str = "run",
         checkpoint_every: int = 1,
+        metrics_sink: list | None = None,
     ) -> None:
         self.spark = spark
         self.dir = checkpoint_dir
         self.run_id = run_id
         self.checkpoint_every = max(1, checkpoint_every)
         self.history: list[dict] = []  # driver-side metric log
+        self.sink = metrics_sink  # the caller's list: gets each record too
 
     # -- checkpoint plumbing -------------------------------------------
 
@@ -143,7 +260,10 @@ class SuperstepRunner:
         lineage.write.mode("append").parquet(f"{self.dir}/lineage")
 
     def _log_metrics(self, step: int, metrics: dict[str, float]) -> None:
-        self.history.append({"superstep": step, **metrics})
+        record = {"superstep": step, **metrics}
+        self.history.append(record)
+        if self.sink is not None:
+            self.sink.append(record)
         if self.dir:
             rows = [(self.run_id, step, k, float(v)) for k, v in metrics.items()]
             self.spark.createDataFrame(
@@ -198,7 +318,12 @@ class SuperstepRunner:
         step = start
         for step in range(max(start, 1), max_iter + 1):
             _t0 = _time.monotonic()
-            new_state, metrics = step_fn(state, step)
+            try:
+                new_state, metrics = step_fn(state, step)
+            except BaseException:
+                if state is not init_state:  # the runner's own checkpoint
+                    release_checkpoint(state, protect=foreign)
+                raise
             metrics["superstep_sec"] = round(_time.monotonic() - _t0, 3)
             self._log_metrics(step, metrics)
             done = converged(metrics) or step == max_iter

@@ -1784,7 +1784,7 @@ def q_corpus_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The north-rule edge-derivation half of corpus_pipeline, fully
     oracled: a SQL-reproducible corpus (modular arithmetic instead of
     xxhash64 draws — the ONLY difference from synthesize_corpus) flows
-    through the REAL operators — extract_refs (Arrow pandas-UDF regex,
+    through the REAL operators — extract_refs (JVM regexp_extract_all,
     all SIX language patterns: python/c/go/javascript/java/rust, each
     file in its language's idiomatic import syntax), defined_symbol
     (JVM regexp), derive_edges (symbol equi-join + (src,dst)

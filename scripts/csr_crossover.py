@@ -61,7 +61,7 @@ def main() -> None:
         spark = get_spark(app_name=f"csr-x-{n_files}", master=f"local[{CORES}]",
                           shuffle_partitions=CORES)
         edges = spark.read.parquet(path)
-        modes = os.environ.get("CSR_MODES", "dataframe,csr,csr_arrow").split(",")
+        modes = os.environ.get("CSR_MODES", "dataframe,csr").split(",")
         for rnd in range(ROUNDS):
             for mode in modes:
                 r = run_mode(spark, edges, mode)

@@ -108,26 +108,6 @@ def test_pagerank_csr_sliced_blocks_match_plain(spark):
         assert _math.isclose(a[k], b[k], abs_tol=1e-9), k
 
 
-def test_pagerank_csr_arrow_matches_plain(spark):
-    """The Arrow-native CSR kernel (applyInArrow, flat-buffer list
-    reads) must equal the dataframe path exactly — including with
-    pathological multi-slice blocks, whose flattened indptr seams the
-    kernel must drop correctly."""
-    import math as _math
-
-    triples = _random_edges(13, n=30, m=90)
-    r_df, _ = pagerank(spark, _edges_df(spark, triples), tol=1e-8, max_iter=50)
-    r_ar, _ = pagerank(
-        spark, _edges_df(spark, triples), tol=1e-8, max_iter=50,
-        mode="csr_arrow", csr_slice_edges=7,
-    )
-    a = {r.id: r.rank for r in r_df.collect()}
-    b = {r.id: r.rank for r in r_ar.collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert _math.isclose(a[k], b[k], abs_tol=1e-9), k
-
-
 def test_anchored_lpa_absorbs_satellites(spark):
     """Reference graph.py:30-123 semantics: anchors keep fixed labels,
     satellites adopt the min labeled-neighbor label until coverage."""
