@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import LoopScope, loop_scope, observed_checkpoint
+from ..plans.superstep import LoopScope, local_rows, loop_scope, observed_checkpoint
 
 
 @contextmanager
@@ -73,7 +73,7 @@ def harmonic_centrality_sampled(
     unless another source reaches them."""
     with _sampled_bfs(spark, edges, sources, max_depth) as (_, _, levels):
         if not levels:
-            return spark.createDataFrame([], "id long, harmonic double")
+            return local_rows(spark, [], "id long, harmonic double")
         parts = [levels[0].select("v", F.lit(0.0).alias("h"))]
         for d, lv in enumerate(levels[1:], start=1):
             parts.append(lv.select("v", F.lit(1.0 / d).alias("h")))
@@ -151,7 +151,7 @@ def betweenness_sampled(
     truncating dependencies."""
     with _sampled_bfs(spark, edges, sources, max_depth) as (scope, e, levels):
         if not levels:
-            return spark.createDataFrame([], "id long, bc double")
+            return local_rows(spark, [], "id long, bc double")
 
         # backward sweep: delta at the deepest level starts at 0
         bc_parts: list[DataFrame] = [
@@ -215,7 +215,7 @@ def closeness_centrality_sampled(
     score 0.0."""
     with _sampled_bfs(spark, edges, sources, max_depth) as (_, _, levels):
         if not levels:
-            return spark.createDataFrame([], "id long, closeness double")
+            return local_rows(spark, [], "id long, closeness double")
         parts = [
             lv.select("s", F.lit(d).cast("long").alias("d"))
             for d, lv in enumerate(levels)
@@ -258,7 +258,7 @@ def eccentricity_sampled(
     (isolated sources get 0)."""
     with _sampled_bfs(spark, edges, sources, max_depth) as (_, _, levels):
         if not levels:
-            return spark.createDataFrame([], "id long, eccentricity long")
+            return local_rows(spark, [], "id long, eccentricity long")
         parts = [
             lv.select("s").distinct().select(
                 "s", F.lit(d).cast("long").alias("d")

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.barrier import checkpoint_leaf_ids, release_checkpoint
-from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
+from ..plans.superstep import SuperstepRunner, local_rows, loop_scope, observed_checkpoint
 
 
 def katz_centrality(
@@ -81,7 +81,7 @@ def katz_centrality(
         )
         n = verts.count()
         if n == 0:
-            return spark.createDataFrame([], "id long, katz double"), 0
+            return local_rows(spark, [], "id long, katz double"), 0
         e_by_src = scope.cache(
             edges.select("src_id", "dst_id", "weight").repartition(p, "src_id")
         )
@@ -183,7 +183,7 @@ def salsa(
         srcs = e.select("src_id").distinct()
         n_src = srcs.count()
         if n_src == 0:
-            return spark.createDataFrame([], "id long, hub double, auth double"), 0
+            return local_rows(spark, [], "id long, hub double, auth double"), 0
         init = srcs.select(
             F.col("src_id").alias("id"), F.lit(1.0 / n_src).alias("hub")
         )

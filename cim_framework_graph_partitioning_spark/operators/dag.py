@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier, release_checkpoint
 from ..plans.scale import auto_blocks
-from ..plans.superstep import loop_scope, observed_checkpoint
+from ..plans.superstep import local_rows, loop_scope, observed_checkpoint
 
 
 def topological_levels(
@@ -92,7 +92,7 @@ def topological_levels(
             n_left -= n_front
             level += 1
     if result is None:  # empty edge table → no vertices, no levels
-        return spark.createDataFrame([], "id long, level int")
+        return local_rows(spark, [], "id long, level int")
     return result.repartition(p, "id")
 
 

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.barrier import release_checkpoint
-from ..plans.superstep import LoopScope, SuperstepRunner, loop_scope, observed_checkpoint
+from ..plans.superstep import LoopScope, SuperstepRunner, local_rows, loop_scope, observed_checkpoint
 
 
 def hits(
@@ -102,7 +102,7 @@ def _hits_inner(
     )
     n = verts.count()
     if n == 0:
-        return spark.createDataFrame([], "id long, hub double, auth double"), 0
+        return local_rows(spark, [], "id long, hub double, auth double"), 0
 
     e = edges.select("src_id", "dst_id", "weight")
     # lazy caches: step 1's two matvec jobs materialize each inside the

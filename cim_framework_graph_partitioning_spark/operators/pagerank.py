@@ -55,7 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import LoopScope, SuperstepRunner, loop_scope, observed_checkpoint
+from ..plans.superstep import LoopScope, SuperstepRunner, local_rows, loop_scope, observed_checkpoint
 
 
 def pagerank_salt_col(salt_buckets: int) -> F.Column:
@@ -169,7 +169,7 @@ def _pagerank_inner(
     verts = scope.cache(verts)
     n = verts.count()
     if n == 0:
-        return spark.createDataFrame([], "id long, rank double"), 0
+        return local_rows(spark, [], "id long, rank double"), 0
     # teleport-set size: n for classic PageRank, |S ∩ verts| when
     # personalized (the denominator of both teleport and dangling terms)
     ns = (

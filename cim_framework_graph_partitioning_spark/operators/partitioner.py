@@ -25,15 +25,17 @@ Execution shape per round (one superstep):
    join, no extra shuffle); gain per candidate move via a broadcast
    join against the k-row part load table; per-vertex argmax with
    deterministic tie-break;
-4. top-M positive-gain candidates (M is a CONSTANT cap, independent of
-   graph size) are reduced to a PAIRWISE NON-ADJACENT subset entirely
-   distributively by priority coloring: for every edge between two
-   candidate movers the lower-priority endpoint (gain asc, id desc) is
-   marked a loser in one pass over the edge table; survivors beat ALL
-   their moved neighbors, so the batch is an independent set. Only the
-   surviving ≤ M rows ever reach the driver — nothing collected grows
-   with vertex count (the reference's driver likewise holds only the
-   current move, calc_cost.py:407-417).
+4. the top-M positive-gain candidates (M is a CONSTANT cap, independent
+   of graph size) are collected in one job, in (gain desc, src_id asc)
+   order, and reduced to a PAIRWISE NON-ADJACENT subset by priority
+   coloring: the candidates go back as a broadcast driver table, and for
+   every edge between two candidate movers the lower-priority endpoint
+   (gain asc, id desc) is marked a loser in one pass over the edge
+   table; only the ≤ M loser ids are collected. Survivors (the collected
+   candidates minus the losers, order kept) beat ALL their moved
+   neighbors, so the batch is an independent set. Nothing collected
+   grows with vertex count (the reference's driver likewise holds only
+   the current move, calc_cost.py:407-417).
    For a non-adjacent batch the objective delta is EXACT and
    driver-computable:
      cut'  = cut − Σ (w_to − w_int)          (neighbors unmoved)
@@ -42,9 +44,12 @@ Execution shape per round (one superstep):
    recompute runs at termination (and under test) to confirm drift-free.
 
 Cost per round: two passes over the salted edge partitions (candidate
-scoring, loser marking) + 1 assignment-lineage truncation; driver
-traffic is O(moves_per_round) = O(1) in graph size — the property that
-holds at 100 TB.
+scoring with the top-M collect, loser marking with the loser-id
+collect; both collect ≤ M rows) + 1 assignment-lineage truncation. The
+part loads, the candidates and the accepted moves reach the JVM as
+Arrow driver tables (``local_rows``), so no round starts a Python
+worker. Driver traffic is O(moves_per_round) = O(1) in graph size — the
+property that holds at 100 TB.
 """
 
 from __future__ import annotations
@@ -52,9 +57,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.barrier import PlanBarrier, release_checkpoint
+from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
-from ..plans.superstep import loop_scope
+from ..plans.superstep import local_rows, loop_scope
 from .edges import symmetrize
 
 
@@ -260,10 +265,7 @@ def balanced_partition(
             )
             cand = w_to.filter(F.col("p_dst") != F.col("p_cur"))
 
-            loads_df = spark.createDataFrame(
-                [(int(part), int(load)) for part, load in loads_map.items()],
-                "part int, load long",
-            )
+            loads_df = local_rows(spark, loads_map.items(), "part int, load long")
             cand = (
                 cand.join(
                     F.broadcast(loads_df.select(F.col("part").alias("p_cur"), F.col("load").alias("load_cur"))),
@@ -291,22 +293,27 @@ def balanced_partition(
                 F.col("_rn") == 1
             )
 
-            # 4a. top-M candidates, M constant (driver-footprint bound)
-            moves_df = (
+            # 4a. top-M candidates, M constant (driver-footprint bound),
+            # collected in one job in (gain desc, src_id asc) order
+            top = (
                 best_moves.orderBy(F.col("gain").desc(), F.col("src_id").asc())
                 .limit(moves_per_round)
                 .select("src_id", "p_cur", "p_dst", "w", "w_int", "gain")
-                .localCheckpoint(eager=True)
+                .collect()
             )
+            if not top:
+                break
 
             # 4b. distributed non-adjacent selection (priority coloring):
             # for every edge between two candidate movers, the lower
             # priority endpoint (gain asc, id desc) loses; survivors beat
             # ALL moved neighbors → pairwise non-adjacent, so every kept
             # move's (w, w_int) stays valid → exact batch delta. One pass
-            # over the edge table; only ≤ M survivors reach the driver.
-            mv_a = moves_df.select(F.col("src_id").alias("a"), F.col("gain").alias("gain_a"))
-            mv_b = moves_df.select(F.col("src_id").alias("b"), F.col("gain").alias("gain_b"))
+            # over the edge table against the broadcast candidates; only
+            # the ≤ M loser ids reach the driver.
+            movers = local_rows(spark, ((r.src_id, r.gain) for r in top), "id long, gain double")
+            mv_a = movers.select(F.col("id").alias("a"), F.col("gain").alias("gain_a"))
+            mv_b = movers.select(F.col("id").alias("b"), F.col("gain").alias("gain_b"))
             pairs = (
                 und.select(F.col("src_id").alias("a"), F.col("dst_id").alias("b"))
                 .filter(F.col("a") < F.col("b"))  # symmetrized: see each pair once
@@ -320,18 +327,12 @@ def balanced_partition(
                     F.col("b"),
                 )
                 .otherwise(F.col("a"))
-                .alias("src_id")
+                .alias("id")
             ).distinct()
-            kept = (
-                moves_df.join(losers, "src_id", "left_anti")
-                .orderBy(F.col("gain").desc(), F.col("src_id").asc())
-                .collect()
-            )
-            release_checkpoint(moves_df)  # fully consumed this round
+            lost = {r.id for r in losers.collect()}
             # the globally highest-priority move never loses the coloring,
-            # so kept is empty iff no positive-gain candidate exists.
-            if not kept:
-                break
+            # so kept is never empty; filtering keeps the collected order
+            kept = [r for r in top if r.src_id not in lost]
 
             # 4c. exact sequential evaluation (the reference's one-move-
             # at-a-time hill climb, calc_cost.py:407-417, batched): each
@@ -362,9 +363,7 @@ def balanced_partition(
             new_ssq = float(sum(v * v for v in new_loads.values()))
             new_obj = alpha * new_cut + load_term
 
-            mv_df = spark.createDataFrame(
-                [(r.src_id, int(r.p_dst)) for r in kept], "id long, new_part int"
-            )
+            mv_df = local_rows(spark, ((r.src_id, r.p_dst) for r in kept), "id long, new_part int")
             best = barrier.cut(
                 best.join(F.broadcast(mv_df), "id", "left")
                 .select(

@@ -66,7 +66,7 @@ from pyspark.sql import functions as F
 
 from ..plans.barrier import PlanBarrier, release_checkpoint
 from ..plans.scale import auto_blocks
-from ..plans.superstep import LoopScope, loop_scope, observed_checkpoint
+from ..plans.superstep import LoopScope, local_rows, loop_scope, observed_checkpoint
 
 
 def strongly_connected_components(
@@ -113,7 +113,7 @@ def strongly_connected_components(
             scope, e_all, remaining, max_rounds, max_iter, p, salt, fuse_steps
         )
     if result is None:
-        return spark.createDataFrame([], "id long, scc_id long")
+        return local_rows(spark, [], "id long, scc_id long")
     # relabel: scc_id = min member id (algorithm-independent contract)
     relabel = result.groupBy("color").agg(F.min("id").alias("scc_id"))
     return result.join(relabel, "color").select("id", "scc_id")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from ..plans.superstep import local_rows
 
 
 def brute_force_topk(
@@ -306,7 +307,7 @@ def ivf_topk(
         (int(i), [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())
     ]
     spark = corpus.sparkSession
-    cdf = spark.createDataFrame(centers, "cell int, centroid array<double>")
+    cdf = local_rows(spark, centers, "cell int, centroid array<double>")
 
     q = queries.select(
         F.col(q_id).alias("query_id"),

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
+from ..plans.superstep import SuperstepRunner, local_rows, loop_scope, observed_checkpoint
 
 
 def label_spreading(
@@ -115,7 +115,7 @@ def _label_spreading_inner(
     )
     if y.count() == 0:
         return (
-            spark.createDataFrame([], "id long, label long, score double"),
+            local_rows(spark, [], "id long, label long, score double"),
             0,
         )
     init = y.select("id", "label", F.col("y").alias("score"))

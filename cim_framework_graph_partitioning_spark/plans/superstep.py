@@ -35,11 +35,14 @@ resumable).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .barrier import PlanBarrier, checkpoint_leaf_ids, release_checkpoint
 
@@ -136,6 +139,25 @@ def loop_scope(
         scope._close(failed=True)
         raise
     scope._close(failed=False)
+
+
+def local_rows(spark: SparkSession, rows: Iterable[Sequence], ddl: str) -> DataFrame:
+    """A small driver-built table, typed by ``ddl`` (every field nullable,
+    as when ``spark.createDataFrame`` is given a list and a DDL string).
+    The rows reach the JVM as one Arrow batch and become a local
+    relation, so reading the frame starts no Python worker; a list given
+    to ``spark.createDataFrame`` becomes ``sc.parallelize`` plus a
+    per-row identity lambda, re-run in Python workers on every read.
+    For tables whose size is a constant or a result size (part loads, a
+    move batch, checkpoint bookkeeping), never graph-sized."""
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)  # allow-arrow-table: the one audited list-to-frame path
 
 
 def observed_checkpoint(
@@ -240,14 +262,13 @@ class SuperstepRunner:
             for fn in os.listdir(path):
                 if fn.startswith("part-") and fn.endswith(".parquet"):
                     sizes.append(
-                        (int(fn.split("-")[1]),
+                        (int(fn.split("-")[1]), "bytes",
                          float(os.path.getsize(os.path.join(path, fn))))
                     )
         rows_df = melted
         if sizes:
-            bytes_df = self.spark.createDataFrame(
-                [(pid, "bytes", b) for pid, b in sizes],
-                "partition_id int, metric string, value double",
+            bytes_df = local_rows(
+                self.spark, sizes, "partition_id int, metric string, value double"
             )
             rows_df = melted.unionByName(bytes_df)
         lineage = rows_df.select(
@@ -266,8 +287,8 @@ class SuperstepRunner:
             self.sink.append(record)
         if self.dir:
             rows = [(self.run_id, step, k, float(v)) for k, v in metrics.items()]
-            self.spark.createDataFrame(
-                rows, "run_id string, superstep int, name string, value double"
+            local_rows(
+                self.spark, rows, "run_id string, superstep int, name string, value double"
             ).write.mode("append").parquet(f"{self.dir}/metrics")
 
     # -- the loop -------------------------------------------------------

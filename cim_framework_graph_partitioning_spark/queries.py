@@ -40,6 +40,7 @@ from .operators.scc import strongly_connected_components
 from .operators.walks import biased_walks, random_walks
 from .operators.similarity import brute_force_topk
 from .operators.triangles import local_clustering_coefficient, triangle_count
+from .plans.superstep import local_rows
 from .sources.corpus import synthesize_corpus_modular
 from .sources.fk_graphs import (
     ORDER_OFFSET,
@@ -1567,8 +1568,8 @@ def q_chain_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         for ci, chain in enumerate(chains)
         for pos, v in enumerate(chain)
     ]
-    return spark.createDataFrame(
-        rows, "chain_id long, pos long, vertex_id long"
+    return local_rows(
+        spark, rows, "chain_id long, pos long, vertex_id long"
     ).orderBy("chain_id", "pos")
 
 
@@ -2612,7 +2613,8 @@ def q_scc_dag_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     levels = topological_levels(spark, cond)
     chains = chain_decomposition(spark, cond)
-    chain_df = spark.createDataFrame(
+    chain_df = local_rows(
+        spark,
         [
             (int(ci), int(pos), int(v))
             for ci, chain in enumerate(chains)

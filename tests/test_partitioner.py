@@ -129,3 +129,28 @@ def test_maxload_with_empty_part_no_drift(spark):
     assert assignment.count() == 4
     objs = [h["objective"] for h in history]
     assert objs == sorted(objs, reverse=True)
+
+
+# Spark jobs of one balanced_partition call: the edge count, the init
+# cut and the exact objective at start and end, plus per round the top-M
+# collect, the loser-id collect and the move apply (with the broadcasts
+# of their driver tables). Measured on _clustered_edges, k=4: 7 + 6 per
+# round.
+SETUP_JOBS = 7
+JOBS_PER_ROUND = 6
+
+
+def test_partitioner_job_ceiling(spark):
+    edges = _edges_df(spark, _clustered_edges())
+    sc = spark.sparkContext
+    group = "test_partitioner_job_ceiling"
+    max_rounds = 15
+    sc.setJobGroup(group, group)
+    try:
+        _, history = balanced_partition(spark, edges, k=4, max_rounds=max_rounds)
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    # every applied round, plus the round that found no improving move
+    rounds = min(len(history), max_rounds)
+    assert jobs <= SETUP_JOBS + JOBS_PER_ROUND * rounds, (jobs, rounds)
