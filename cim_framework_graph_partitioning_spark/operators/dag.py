@@ -118,12 +118,10 @@ def longest_path_lengths(
         .distinct()
     )
     barrier = PlanBarrier(spark, tag="longest_path")
-    dist = (
-        verts.select("id", F.lit(0).alias("dist"))
-        .repartition(p, "id")
-        .localCheckpoint(eager=True)
-    )
     with loop_scope(spark) as scope:
+        # the initial dist is the barrier's first cut: the next cut
+        # releases it, and max_iter=0 returns it
+        dist = barrier.cut(verts.select("id", F.lit(0).alias("dist")).repartition(p, "id"))
         e = scope.cache(
             edges.select("src_id", "dst_id").distinct().repartition(p, "src_id")
         )

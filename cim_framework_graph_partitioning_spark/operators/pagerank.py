@@ -27,19 +27,20 @@ Two execution paths, identical semantics:
   ``salted=True`` an explicit two-phase (dst,salt)→dst aggregation
   bounds any single reducer's hub load (power-law skew handling).
 
-* ``mode="csr"`` — per-partition gather-scatter over locally CSR-packed
-  adjacency blocks: edges are packed once into numpy (indptr, dst,
-  frac) arrays per block via applyInPandas, then each superstep
-  cogroups the rank block with its CSR block and a numpy kernel emits
-  per-block PARTIAL sums per dst — shuffle volume drops from one row
-  per edge to one row per (block, distinct dst).
+* ``mode="csr"`` — the same join+groupBy over a CSR layout: normalized
+  edges are packed ONCE into one cached row per (src_id, slice), each
+  holding an ``adj array<struct<dst_id, frac>>`` of at most
+  ``csr_slice_edges`` entries. Every superstep joins the rank table to
+  those rows (one probe per source slice instead of one per edge),
+  inlines the arrays and sums rank*frac per dst; the map-side partial
+  aggregate ships one row per (block, distinct dst). The whole step
+  runs in the JVM: no Python worker, no Arrow hop.
 
-Which is faster is MEASURED, not assumed (BENCH/CSR_CROSSOVER.md):
-csr wins ~2x in the mid-regime (~10M edges / 32 threads, skewed
-graphs); dataframe wins ~1.5x in the DRAM-bound regime (32M edges on
-one box) because csr pays an Arrow hop into Python workers per
-superstep. dataframe is the default; csr is the documented mid-regime
-option.
+Which is faster is MEASURED, not assumed (BENCH/CSR_CROSSOVER.md): the
+csr rows cost more to build than the cached normalized edges (a window
+sort and a collect_list pass); at 1M-4M edges on local[3] their steps
+measured level with dataframe's, within noise. dataframe is the
+default.
 
 At 100 TB the static normalized-edge table dominates; both paths scan it
 once per superstep with only rank-sized shuffles on top, and
@@ -49,8 +50,6 @@ mid-convergence resume.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -188,15 +187,23 @@ def _pagerank_inner(
         (F.col("weight") / F.sum("weight").over(Window.partitionBy("src_id"))).alias("frac"),
     )
     if mode == "csr":
-        # hash-partition the (static, large) block table by its cogroup
-        # key ONCE: the per-superstep cogroup then reuses this exchange
-        # and only the rank side shuffles — the same static-side rule
-        # the dataframe path follows.
-        blocks = scope.cache(
-            _pack_csr_blocks(norm, p, max_edges_per_slice=csr_slice_edges)
-            .repartition(p, "block")
+        # one adjacency row per (src_id, slice): a slice is an edge's
+        # position in its source's dst_id order // csr_slice_edges, which
+        # bounds any row to csr_slice_edges entries however large the
+        # hub. norm's src_id partitioning satisfies both the window and
+        # the (src_id, slice) grouping, so this adds no exchange, and the
+        # cached rows keep hash(src_id, p) for every superstep's join.
+        pos = F.row_number().over(Window.partitionBy("src_id").orderBy("dst_id")) - 1
+        adj = scope.cache(
+            norm.select(
+                "src_id",
+                F.floor(pos / csr_slice_edges).alias("slice"),
+                F.struct("dst_id", "frac").alias("e"),
+            )
+            .groupBy("src_id", "slice")
+            .agg(F.collect_list("e").alias("adj"))
         )
-        blocks.count()
+        adj.count()
     else:
         norm = scope.cache(norm)
         norm.count()
@@ -236,13 +243,21 @@ def _pagerank_inner(
         )
 
     def step_fn(ranks: DataFrame, step: int):
+        # shuffle-hash, not sort-merge: the cached edge table must not be
+        # re-sorted every superstep (measured 1.8x/step), and the rank
+        # table is never broadcastable at the target scale.
+        r = ranks.select("id", "rank").hint("shuffle_hash")
         if mode == "csr":
-            sums = _csr_contributions(ranks.select("id", "rank"), blocks, p)
+            # the partial aggregate before the dst_id exchange is the
+            # per-(block, dst) partial sum: one shuffled row per distinct
+            # dst of a block, not one per edge
+            sums = (
+                r.join(adj, r.id == adj.src_id)
+                .select("rank", F.inline("adj"))
+                .groupBy("dst_id")
+                .agg(F.sum(F.col("rank") * F.col("frac")).alias("s"))
+            )
         else:
-            # shuffle-hash, not sort-merge: the cached edge table must
-            # not be re-sorted every superstep (measured 1.8x/step), and
-            # the rank table is never broadcastable at the target scale.
-            r = ranks.select("id", "rank").hint("shuffle_hash")
             contribs = r.join(norm, r.id == norm.src_id).select(
                 "src_id", "dst_id", (F.col("rank") * F.col("frac")).alias("contrib")
             )
@@ -338,93 +353,3 @@ def _pagerank_inner(
         pre_truncated=True,
     )
     return ranks.select("id", "rank"), steps
-
-
-# --- CSR fast path -------------------------------------------------------
-
-_CSR_SCHEMA = (
-    "block int, src_ids array<long>, indptr array<long>, "
-    "dst_ids array<long>, frac array<double>"
-)
-
-
-def _pack_csr_blocks(
-    norm: DataFrame, p: int, max_edges_per_slice: int = 8_000_000
-) -> DataFrame:
-    """Pack normalized edges into CSR rows per hash block of src_id.
-
-    One-time cost; per superstep the kernel gathers ranks by src position
-    and scatters weighted contributions per dst (all numpy, Arrow in/out).
-
-    A block larger than ``max_edges_per_slice`` is emitted as MULTIPLE
-    slice rows (a slice may even start mid-src — per-slice partial sums
-    add up correctly downstream). This bounds any single Arrow record to
-    ~slice_size * 20 bytes, far below Arrow's 2 GB record limit, no
-    matter how skewed the block."""
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["src_id", "dst_id"], kind="mergesort")
-        block = int(pdf["block"].iloc[0])
-        out = []
-        for lo in range(0, len(pdf), max_edges_per_slice):
-            chunk = pdf.iloc[lo : lo + max_edges_per_slice]
-            src = chunk["src_id"].to_numpy()
-            uniq, starts = np.unique(src, return_index=True)
-            indptr = np.append(starts, len(src)).astype("int64")
-            out.append(
-                {
-                    "block": block,
-                    "src_ids": uniq,
-                    "indptr": indptr,
-                    "dst_ids": chunk["dst_id"].to_numpy(),
-                    "frac": chunk["frac"].to_numpy(),
-                }
-            )
-        return pd.DataFrame(out)
-
-    withb = norm.withColumn("block", F.pmod(F.xxhash64("src_id"), F.lit(p)).cast("int"))
-    return withb.groupBy("block").applyInPandas(pack, _CSR_SCHEMA)
-
-
-def _csr_contributions(ranks: DataFrame, blocks: DataFrame, p: int) -> DataFrame:
-    """cogroup(ranks_by_block, csr_blocks) → block-partial (dst_id, s)."""
-
-    def kernel(key, rank_pdf: pd.DataFrame, block_pdf: pd.DataFrame) -> pd.DataFrame:
-        if block_pdf.empty or rank_pdf.empty:
-            return pd.DataFrame(
-                {"dst_id": pd.Series(dtype="int64"), "s": pd.Series(dtype="float64")}
-            )
-        # gather index: ranks of this hash block, sorted once per call
-        rid = rank_pdf["id"].to_numpy()
-        rv = rank_pdf["rank"].to_numpy()
-        order = np.argsort(rid, kind="mergesort")
-        rid_s, rv_s = rid[order], rv[order]
-        dsts, vals = [], []
-        # a block may arrive as several bounded slices (Arrow 2GB guard);
-        # per-slice partial sums add up, so slices are independent.
-        for i in range(len(block_pdf)):
-            row = block_pdf.iloc[i]
-            src_ids = np.asarray(row["src_ids"], dtype="int64")
-            indptr = np.asarray(row["indptr"], dtype="int64")
-            dst = np.asarray(row["dst_ids"], dtype="int64")
-            frac = np.asarray(row["frac"], dtype="float64")
-            pos = np.searchsorted(rid_s, src_ids)
-            r_src = rv_s[pos]
-            per_edge = np.repeat(r_src, np.diff(indptr)) * frac
-            dsts.append(dst)
-            vals.append(per_edge)
-        dst_all = np.concatenate(dsts)
-        val_all = np.concatenate(vals)
-        # scatter: block-local partial aggregation per dst (bincount is
-        # ~10x faster than np.add.at's non-vectorized path)
-        udst, inv = np.unique(dst_all, return_inverse=True)
-        s = np.bincount(inv, weights=val_all, minlength=len(udst))
-        return pd.DataFrame({"dst_id": udst, "s": s})
-
-    ranks_b = ranks.withColumn("block", F.pmod(F.xxhash64("id"), F.lit(p)).cast("int"))
-    partial = (
-        ranks_b.groupBy("block")
-        .cogroup(blocks.groupBy("block"))
-        .applyInPandas(kernel, "dst_id long, s double")
-    )
-    return partial.groupBy("dst_id").agg(F.sum("s").alias("s"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.superstep import LoopScope, loop_scope
 from .edges import symmetrize
 
 
@@ -55,20 +56,31 @@ def _oriented(und: DataFrame) -> DataFrame:
     )
 
 
+# The public entry points return a materialized result, so the
+# intermediate checkpoints (the simple edge set and its orientation) are
+# released when the call returns instead of pinned for the session.
+
+
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count. Returns 1-row DataFrame (n_triangles long)."""
-    return _closed_wedges(_simple_undirected(edges)).agg(
-        F.count("*").alias("n_triangles")
-    )
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.own(_simple_undirected(edges))
+        return (
+            _closed_wedges(und, scope)
+            .agg(F.count("*").alias("n_triangles"))
+            .localCheckpoint(eager=True)
+        )
 
 
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation counts (id, n_triangles)."""
-    return _triangles_per_vertex(_simple_undirected(edges))
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.own(_simple_undirected(edges))
+        return _triangles_per_vertex(und, scope).localCheckpoint(eager=True)
 
 
-def _triangles_per_vertex(und: DataFrame) -> DataFrame:
-    tri = _closed_wedges(und)
+def _triangles_per_vertex(und: DataFrame, scope: LoopScope) -> DataFrame:
+    tri = _closed_wedges(und, scope)
     corners = (
         tri.select(F.col("a").alias("id"))
         .unionAll(tri.select(F.col("b").alias("id")))
@@ -87,37 +99,40 @@ def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
     oriented triangle enumeration (the skew control carries over: the
     only new work on top of ``triangles_per_vertex`` is one degree
     aggregation and a vertex-keyed left join)."""
-    und = _simple_undirected(edges)
-    deg = und.groupBy(F.col("src_id").alias("id")).agg(
-        F.count("*").cast("long").alias("degree")
-    )
-    tri = _triangles_per_vertex(und)
-    d = F.col("degree").cast("double")
-    return (
-        deg.join(tri, "id", "left")
-        .select(
-            "id",
-            "degree",
-            F.coalesce(F.col("n_triangles"), F.lit(0)).cast("long").alias(
-                "n_triangles"
-            ),
-            F.when(
-                F.col("degree") >= 2,
-                2.0 * F.coalesce(F.col("n_triangles"), F.lit(0)) / (d * (d - 1.0)),
-            )
-            .otherwise(0.0)
-            .alias("coeff"),
+    with loop_scope(edges.sparkSession) as scope:
+        und = scope.own(_simple_undirected(edges))
+        deg = und.groupBy(F.col("src_id").alias("id")).agg(
+            F.count("*").cast("long").alias("degree")
         )
-    )
+        tri = _triangles_per_vertex(und, scope)
+        d = F.col("degree").cast("double")
+        return (
+            deg.join(tri, "id", "left")
+            .select(
+                "id",
+                "degree",
+                F.coalesce(F.col("n_triangles"), F.lit(0)).cast("long").alias(
+                    "n_triangles"
+                ),
+                F.when(
+                    F.col("degree") >= 2,
+                    2.0 * F.coalesce(F.col("n_triangles"), F.lit(0)) / (d * (d - 1.0)),
+                )
+                .otherwise(0.0)
+                .alias("coeff"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
-def _closed_wedges(und: DataFrame) -> DataFrame:
+def _closed_wedges(und: DataFrame, scope: LoopScope) -> DataFrame:
     """Closed wedges (a, b, c) over a MATERIALIZED simple undirected
     edge set. The oriented table is localCheckpointed: the wedge plan
     scans it from three subtrees (e1, e2, the closing semi-join) and a
     lazy persist would still re-run the orientation joins once before
-    the cache fills."""
-    o = _oriented(und).localCheckpoint(eager=True)
+    the cache fills. ``scope`` releases that checkpoint at its exit, so
+    the caller materializes whatever it keeps of the wedges first."""
+    o = scope.checkpoint(_oriented(und))
     e1 = o.select(F.col("u").alias("a"), F.col("v").alias("b"))
     e2 = o.select(F.col("u").alias("b"), F.col("v").alias("c"))
     wedges = e1.join(e2, "b")

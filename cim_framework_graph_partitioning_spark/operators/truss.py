@@ -51,13 +51,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..plans.barrier import checkpoint_leaf_ids
 from ..plans.scale import auto_blocks
-from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
+from ..plans.superstep import LoopScope, SuperstepRunner, loop_scope, observed_checkpoint
 from .triangles import _closed_wedges, _simple_undirected
 
 
-def _edge_incidence(und: DataFrame) -> DataFrame:
+def _edge_incidence(und: DataFrame, scope: LoopScope) -> DataFrame:
     """Static (triangle, member-edge, rank) incidence in long format:
     (tid, eu, ev) with (eu, ev) the canonical (min, max) edge key and
     tid a deterministic per-triangle id. 3 rows per triangle.
@@ -71,7 +70,7 @@ def _edge_incidence(und: DataFrame) -> DataFrame:
     # and the former a+b+c sum overflowed long under ANSI mode for
     # xxhash64-range vertex ids (latent until a corpus-derived graph —
     # full 64-bit ids — had any triangle; found in the r6 verify drive).
-    tri = _closed_wedges(und).select(
+    tri = _closed_wedges(und, scope).select(
         F.least("a", "b", "c").alias("x"),
         F.when(
             (F.col("a") != F.least("a", "b", "c"))
@@ -123,7 +122,7 @@ def trussness(
             und.filter(F.col("src_id") < F.col("dst_id"))
             .select(F.col("src_id").alias("eu"), F.col("dst_id").alias("ev"))
         )
-        inc_rows = _edge_incidence(und)
+        inc_rows = _edge_incidence(und, scope)
         n_inc = inc_rows.count()
         p = num_blocks or auto_blocks(
             n_inc, spark.sparkContext.defaultParallelism
@@ -136,9 +135,6 @@ def trussness(
             .repartition(p, "i_eu", "i_ev")
         )
         inc.count()
-        # the oriented-wedge checkpoint the incidence was built from; und
-        # stays live, the returned frame reads it
-        scope.own(inc_rows, protect=checkpoint_leaf_ids(canon))
 
         support = inc.groupBy(
             F.col("i_eu").alias("eu"), F.col("i_ev").alias("ev")

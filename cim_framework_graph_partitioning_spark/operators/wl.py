@@ -145,6 +145,10 @@ def wl_refinement(
             checkpoint_every=checkpoint_every,
         )
         seen = {"prev": -1.0}
+        if resume and not fixed and (last := runner.latest_step()) is not None:
+            # the resumed first step must compare against the committed
+            # step's count, as it would have in an uninterrupted run
+            seen["prev"] = runner.logged_metrics(last).get("n_colors", -1.0)
 
         def stable(m: dict) -> bool:
             if fixed:

@@ -280,6 +280,22 @@ class SuperstepRunner:
         )
         lineage.write.mode("append").parquet(f"{self.dir}/lineage")
 
+    def logged_metrics(self, step: int) -> dict[str, float]:
+        """The metrics this run id logged to ``{dir}/metrics`` for
+        ``step`` (empty without a checkpoint dir, or for step 0). A
+        resumed loop whose convergence test compares against the
+        previous step reads its last committed step from here."""
+        path = f"{self.dir}/metrics"
+        if not self.dir or not os.path.isdir(path):
+            return {}
+        rows = (
+            self.spark.read.parquet(path)
+            .filter((F.col("run_id") == self.run_id) & (F.col("superstep") == step))
+            .select("name", "value")
+            .collect()
+        )
+        return {r.name: r.value for r in rows}
+
     def _log_metrics(self, step: int, metrics: dict[str, float]) -> None:
         record = {"superstep": step, **metrics}
         self.history.append(record)

@@ -89,23 +89,45 @@ def test_pagerank_corpus_scale_matches_numpy_oracle(spark):
     edges.unpersist()
 
 
-def test_pagerank_csr_sliced_blocks_match_plain(spark):
-    """CSR blocks split into bounded slices (Arrow 2GB guard) — with a
-    pathological 7-edge slice bound every block is multi-slice, and the
-    result must still equal the dataframe path exactly."""
-    import math as _math
+def test_pagerank_csr_sliced_blocks_match_plain(spark, monkeypatch):
+    """CSR adjacency rows split into bounded slices (the row-size bound:
+    at most csr_slice_edges entries per (src_id, slice) row) — with a
+    pathological 7-edge bound every source of degree > 7 spans several
+    rows, a 25-out-edge hub packs into ceil(25/7) = 4 of them, and the
+    ranks must still equal the dataframe path exactly."""
+    from cim_framework_graph_partitioning_spark.plans.superstep import LoopScope
 
-    triples = _random_edges(11, n=30, m=90)
-    r_df, _ = pagerank(spark, _edges_df(spark, triples), tol=1e-8, max_iter=50)
-    r_csr, _ = pagerank(
-        spark, _edges_df(spark, triples), tol=1e-8, max_iter=50,
-        mode="csr", csr_slice_edges=7,
+    cached = []
+    cache = LoopScope.cache
+
+    def spy(self, df):
+        cached.append(df)
+        return cache(self, df)
+
+    monkeypatch.setattr(LoopScope, "cache", spy)
+    hub = (
+        [(0, i, float(1 + i % 3)) for i in range(1, 26)]
+        + [(i, i % 25 + 1, 1.0) for i in range(1, 26)]
+        + [(i, 0, 1.0) for i in range(1, 26, 5)]
     )
-    a = {r.id: r.rank for r in r_df.collect()}
-    b = {r.id: r.rank for r in r_csr.collect()}
-    assert set(a) == set(b)
-    for k in a:
-        assert _math.isclose(a[k], b[k], abs_tol=1e-9), k
+    for triples in (_random_edges(11, n=30, m=90), hub):
+        cached.clear()
+        r_df, _ = pagerank(spark, _edges_df(spark, triples), tol=1e-8, max_iter=50)
+        r_csr, _ = pagerank(
+            spark, _edges_df(spark, triples), tol=1e-8, max_iter=50,
+            mode="csr", csr_slice_edges=7,
+        )
+        a = {r.id: r.rank for r in r_df.collect()}
+        b = {r.id: r.rank for r in r_csr.collect()}
+        assert set(a) == set(b)
+        for k in a:
+            assert math.isclose(a[k], b[k], abs_tol=1e-9), k
+
+    (adj,) = [df for df in cached if "adj" in df.columns]
+    rows = adj.filter(F.col("src_id") == 0).collect()
+    assert len(rows) == math.ceil(25 / 7)
+    assert all(len(r.adj) <= 7 for r in rows)
+    assert sorted(e.dst_id for r in rows for e in r.adj) == list(range(1, 26))
 
 
 def test_anchored_lpa_absorbs_satellites(spark):

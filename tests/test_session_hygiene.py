@@ -17,8 +17,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from cim_framework_graph_partitioning_spark.operators import (
-    centrality, coloring, components, hits, kcore, labelprop, mis, pagerank,
-    partitioner, paths, scc, spreading, truss, wl,
+    centrality, coloring, components, dag, hits, kcore, labelprop, mis, pagerank,
+    partitioner, paths, scc, spreading, triangles, truss, wl,
 )
 from cim_framework_graph_partitioning_spark.plans.barrier import checkpoint_leaf_ids
 from cim_framework_graph_partitioning_spark.plans.superstep import SuperstepRunner
@@ -60,6 +60,11 @@ ENTRY_POINTS = {
     "spreading": (lambda s, e: spreading.label_spreading(s, e, _seeds(s), max_iter=4), True),
     "partitioner": (lambda s, e: partitioner.balanced_partition(s, e, k=2), False),
     "scc": (lambda s, e: scc.strongly_connected_components(s, e), False),
+    "triangles": (lambda s, e: triangles.triangle_count(e), False),
+    "clustering": (lambda s, e: triangles.local_clustering_coefficient(e), False),
+    # the fixture's 4-5-6 cycle never converges: three DP segments run
+    "longest_path": (lambda s, e: dag.longest_path_lengths(s, e, max_iter=3), False),
+    "longest_path_0": (lambda s, e: dag.longest_path_lengths(s, e, max_iter=0), False),
 }
 
 CASES = [(name, how) for name, (_, loops) in ENTRY_POINTS.items()

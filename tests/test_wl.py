@@ -93,3 +93,17 @@ def test_wl_partitioning_invariant(spark):
          for r in wl_refinement(spark, df.repartition(13), rounds=3)[0]
          .collect()}
     assert a == b
+
+
+def test_wl_resume_takes_the_uninterrupted_steps(spark, tmp_path):
+    # P9 gains one class per round until its 5 distance classes, so the
+    # count first repeats at round 4. A run stopped after round 3 and
+    # resumed must compare round 4 against round 3's committed count.
+    df = _edges_df(spark, [(i, i + 1) for i in range(8)])
+    want, want_steps = wl_refinement(spark, df)
+    assert want_steps == 4
+    ck = str(tmp_path / "wl")
+    wl_refinement(spark, df, max_iter=want_steps - 1, checkpoint_dir=ck)
+    got, steps = wl_refinement(spark, df, checkpoint_dir=ck, resume=True)
+    assert steps == want_steps
+    assert {r.id: r.color for r in got.collect()} == {r.id: r.color for r in want.collect()}
