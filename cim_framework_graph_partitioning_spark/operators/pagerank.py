@@ -211,12 +211,14 @@ def _pagerank_inner(
     # state schema: (id, rank, has_out, in_s) — has_out/in_s ride IN the
     # state so no per-superstep join against a separate verts table is
     # needed (one fewer state-sized join per step).
-    init = verts.select(
-        "id",
-        F.when(F.col("in_s"), F.lit(1.0 / ns)).otherwise(F.lit(0.0)).alias("rank"),
-        "has_out",
-        "in_s",
-    )
+    # Graph-size values stay out of generated code: Spark inlines a
+    # double literal into the class it compiles, so F.lit(1.0 / ns) would
+    # compile new classes for every graph, while an array literal is
+    # passed to the class as data. The start rank is looked up by the
+    # in_s flag: 0.0 off the teleport set, 1/ns on it (the coalesce only
+    # keeps the column non-nullable, as the state's rank always was).
+    start = F.coalesce(F.get(F.lit([0.0, 1.0 / ns]), F.col("in_s").cast("int")), F.lit(0.0))
+    init = verts.select("id", start.alias("rank"), "has_out", "in_s")
     if init_ranks is not None:
         r0 = init_ranks.select(
             F.col(init_ranks.columns[0]).alias("id"),
@@ -234,13 +236,15 @@ def _pagerank_inner(
         init = warm.crossJoin(tot).select(
             "id",
             F.when(F.col("_tot") > 0.0, F.col("_r0") / F.col("_tot"))
-            .otherwise(
-                F.when(F.col("in_s"), F.lit(1.0 / ns)).otherwise(F.lit(0.0))
-            )
+            .otherwise(start)
             .alias("rank"),
             "has_out",
             "in_s",
         )
+
+    consts = local_rows(
+        spark, [((1.0 - damping) / ns, float(ns))], "_c0 double, _ns double"
+    ).hint("shuffle_replicate_nl")
 
     def step_fn(ranks: DataFrame, step: int):
         # shuffle-hash, not sort-merge: the cached edge table must not be
@@ -286,16 +290,21 @@ def _pagerank_inner(
         # resume-from-checkpoint sees the right value by construction.
         # Arithmetic mirrors the former python expression term for term
         # ((1-d)/ns constant + d * dang / ns), so results are bit-equal.
+        # The graph-size constants come from the one-row driver table,
+        # not literals (see `start`); under the replicate hint it joins
+        # the one-row aggregate inside the broadcast job, with no
+        # broadcast or exchange of its own.
         base_df = F.broadcast(
             ranks.agg(
+                F.coalesce(
+                    F.sum(F.when(~F.col("has_out"), F.col("rank"))),
+                    F.lit(0.0),
+                ).alias("_dang")
+            )
+            .crossJoin(consts)
+            .select(
                 (
-                    F.lit((1.0 - damping) / ns)
-                    + F.lit(damping)
-                    * F.coalesce(
-                        F.sum(F.when(~F.col("has_out"), F.col("rank"))),
-                        F.lit(0.0),
-                    )
-                    / F.lit(float(ns))
+                    F.col("_c0") + F.lit(damping) * F.col("_dang") / F.col("_ns")
                 ).alias("base")
             )
         )

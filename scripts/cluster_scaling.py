@@ -39,6 +39,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 from cim_framework_graph_partitioning_spark.operators.pagerank import (  # noqa: E402
     pagerank,
 )
+from cim_framework_graph_partitioning_spark.session import CODEGEN_CACHE_ENTRIES  # noqa: E402
 
 from _edges import edge_table  # noqa: E402
 from scaling_bench import wait_for_quiet  # noqa: E402
@@ -65,6 +66,7 @@ def run_level(execs: int, edges_path: str) -> dict:
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.driver.memory", "8g")
         .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .getOrCreate()
     )
     edges = spark.read.parquet(edges_path)

@@ -206,6 +206,7 @@ def _part_b_level(cores: int, edges_path: str) -> dict:
     from pyspark.sql import SparkSession
 
     from cim_framework_graph_partitioning_spark.operators.pagerank import pagerank
+    from cim_framework_graph_partitioning_spark.session import CODEGEN_CACHE_ENTRIES
 
     local_dir = "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else None
     b = (
@@ -217,6 +218,7 @@ def _part_b_level(cores: int, edges_path: str) -> dict:
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if local_dir:
         b = b.config("spark.local.dir", local_dir)
