@@ -2,10 +2,10 @@
 
 Reference precedents:
 - Kahn topological sort (reference: graph.py:210-224) → iterative
-  in-degree-0 peel via anti-join; returns each vertex's topological
-  LEVEL (all level-k vertices are mutually unordered, so the level
-  order is a valid — and deterministic — topological order when read
-  as (level, id)).
+  in-degree-0 peel over one (id, level) state; returns each vertex's
+  topological LEVEL (all level-k vertices are mutually unordered, so
+  the level order is a valid — and deterministic — topological order
+  when read as (level, id)).
 - Longest-path DP with predecessor backtracking (reference:
   graph.py:32-58, used to find the model's main chain) → iterative
   relaxation: dist(v) = max over in-neighbors (dist(u) + 1), one
@@ -28,72 +28,68 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.barrier import PlanBarrier, release_checkpoint
+from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
-from ..plans.superstep import local_rows, loop_scope, observed_checkpoint
+from ..plans.superstep import loop_scope, observed_checkpoint
 
 
 def topological_levels(
     spark: SparkSession, edges: DataFrame, max_iter: int = 10_000
 ) -> DataFrame:
-    """Kahn peel as iterative anti-join. Returns (id, level).
+    """Kahn peel, one round per level. Returns (id, level).
 
     Each round removes the current in-degree-0 frontier; a vertex's
     level is the round it was peeled. Raises ValueError on a cycle.
+
+    One state (id, level), level null while a vertex is unpeeled, and
+    one cut per round: the frontier is every unpeeled vertex with no
+    edge from an unpeeled vertex, and the same job observes how many
+    vertices the round found unpeeled and how many it peeled.
     """
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    remaining_edges = edges.select("src_id", "dst_id").distinct().persist()
-    remaining = (
-        remaining_edges.select(F.col("src_id").alias("id"))
-        .unionByName(remaining_edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-        .persist()
-    )
-    result = None
-    level = 0
-    n_left = remaining.count()
-    b_verts = PlanBarrier(spark, tag="topo_verts")
-    b_edges = PlanBarrier(spark, tag="topo_edges")
-    b_result = PlanBarrier(spark, tag="topo_result")
-    # loop-scoped shuffle pin; AQE stays on (see longest_path_lengths)
-    with loop_scope(spark, p, pin_aqe=False):
-        while n_left > 0 and level < max_iter:
-            has_in = remaining_edges.select(F.col("dst_id").alias("id")).distinct()
-            # frontier is CHECKPOINTED (lineage cut), not merely cached:
-            # the three cuts below each reference it, and b_verts's cut
-            # releases the old `remaining` BEFORE b_edges's cut runs —
-            # if frontier still carried lineage to that released
-            # checkpoint, a cache bypass (reproduced with AQE off)
-            # recomputes through it and dies with
-            # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. A lineage-free frontier
-            # makes the release order irrelevant under any session conf.
-            frontier = remaining.join(has_in, "id", "left_anti").localCheckpoint(
-                eager=True
+    with loop_scope(spark, p) as scope:
+        e = scope.cache(
+            edges.select("src_id", "dst_id").distinct().repartition(p, "src_id")
+        )
+        state = (
+            e.select(F.col("src_id").alias("id"))
+            .unionByName(e.select(F.col("dst_id").alias("id")))
+            .distinct()
+            .select("id", F.lit(None).cast("int").alias("level"))
+        )
+        barrier = PlanBarrier()
+        for level in range(max_iter):
+            unpeeled = F.col("level").isNull()
+            # both joins hash-partitioned, never broadcast: a broadcast
+            # costs a job, and a small graph's e (every round) or early
+            # rounds' estimates would get one
+            blocked = (
+                state.filter(unpeeled).select(F.col("id").alias("src_id"))
+                .hint("shuffle_hash")
+                .join(e, "src_id")
+                .select(F.col("dst_id").alias("id"), F.lit(True).alias("blocked"))
+                .distinct()
             )
-            n_front = frontier.count()
-            if n_front == 0:
-                raise ValueError(f"cycle detected: {n_left} vertices unpeelable")
-            # accumulate levels through the barrier (materialized each
-            # round) so no later union re-reads a released state.
-            level_df = frontier.select("id", F.lit(level).alias("level"))
-            result = b_result.cut(
-                level_df if result is None else result.unionByName(level_df)
+            peel = unpeeled & F.col("blocked").isNull()
+            state, m = observed_checkpoint(
+                state.join(blocked.hint("shuffle_hash"), "id", "left").select(
+                    "id",
+                    F.when(peel, F.lit(level)).otherwise(F.col("level")).alias("level"),
+                    unpeeled.alias("was_left"),
+                    peel.alias("peeled"),
+                ),
+                select=("id", "level"),
+                cut=barrier.cut,
+                left=F.sum(F.col("was_left").cast("int")),
+                front=F.sum(F.col("peeled").cast("int")),
             )
-            new_remaining = b_verts.cut(remaining.join(frontier, "id", "left_anti"))
-            new_edges = b_edges.cut(
-                remaining_edges.join(
-                    frontier.select(F.col("id").alias("src_id")), "src_id", "left_anti"
-                )
-            )
-            remaining.unpersist()
-            remaining_edges.unpersist()
-            release_checkpoint(frontier)
-            remaining, remaining_edges = new_remaining, new_edges
-            n_left -= n_front
-            level += 1
-    if result is None:  # empty edge table → no vertices, no levels
-        return local_rows(spark, [], "id long, level int")
-    return result.repartition(p, "id")
+            if m["front"] == m["left"]:
+                break
+            if m["front"] == 0:
+                raise ValueError(f"cycle detected: {int(m['left'])} vertices unpeelable")
+    # levels past max_iter stay null: like an unfinished peel, they are
+    # left out (the filter also makes level non-nullable again)
+    return state.filter(F.col("level").isNotNull())
 
 
 def longest_path_lengths(
@@ -117,7 +113,7 @@ def longest_path_lengths(
         .unionByName(edges.select(F.col("dst_id").alias("id")))
         .distinct()
     )
-    barrier = PlanBarrier(spark, tag="longest_path")
+    barrier = PlanBarrier()
     with loop_scope(spark) as scope:
         # the initial dist is the barrier's first cut: the next cut
         # releases it, and max_iter=0 returns it
@@ -125,13 +121,7 @@ def longest_path_lengths(
         e = scope.cache(
             edges.select("src_id", "dst_id").distinct().repartition(p, "src_id")
         )
-        # loop-scoped shuffle pin. AQE is deliberately LEFT ALONE here:
-        # with adaptive execution disabled, this loop's
-        # accumulate-union-of-checkpoints pattern trips a reproducible
-        # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in PlanBarrier's release path
-        # (test_topological_levels fails deterministically); the peel runs
-        # one round per DAG level, so per-round replanning is cheap anyway.
-        scope.pin(p, pin_aqe=False)
+        scope.pin(p)
 
         def relax(d: DataFrame) -> DataFrame:
             cand = (

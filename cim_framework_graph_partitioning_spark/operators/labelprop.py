@@ -125,7 +125,7 @@ def anchored_label_propagation(
         .unionByName(und.select(F.col("dst_id").alias("id")))
         .distinct()
     )
-    barrier = PlanBarrier(spark, tag="anchored_lpa")
+    barrier = PlanBarrier()
     labels = barrier.cut(
         verts.join(anchors.select("id", F.col("label").alias("_al")), "id", "left")
         .select("id", F.col("_al").alias("label"))

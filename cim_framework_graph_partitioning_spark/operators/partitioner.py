@@ -210,7 +210,7 @@ def balanced_partition(
             .distinct()
         )
 
-        barrier = PlanBarrier(spark, tag="partitioner")
+        barrier = PlanBarrier()
         part0 = (
             init_part
             if init_part is not None

@@ -36,7 +36,8 @@ max-id root; matches connected_components' labeling convention).
 Scale shape: all three phases are keyed joins/aggregations over the
 remaining-edge table, re-persisted per round hash-partitioned by
 src_id; only (id, color[, flag]) state shuffles inside the fixpoints;
-plan lineage is truncated via PlanBarrier. No driver-side collect
+each segment's state is cut once (``PlanBarrier.cut``, which releases
+the segment it supersedes). No driver-side collect
 carries vertex data — convergence metrics are scalar counts.
 
 Two fixpoint-loop cost controls (both matter because iterations are
@@ -48,8 +49,8 @@ naively):
   task-scheduling overhead, while the same code on a 10^11-vertex
   graph picks the parallelism the data needs.
 * ``fuse_steps`` propagation steps run LAZILY per materialization:
-  one Spark job executes B chained join-steps, then a single
-  count + PlanBarrier cut. Monotone max-propagation makes overshoot
+  one Spark job executes B chained join-steps and the cut, with the
+  frontier count observed on the same job. Monotone max-propagation makes overshoot
   harmless (steps past the fixpoint are no-ops on empty frontiers),
   so convergence is checked on the last fused step only. Within a
   segment each step references its predecessor twice (state join +
@@ -131,7 +132,7 @@ def _scc_rounds(
 ) -> DataFrame | None:
     """The peel loop of strongly_connected_components. Its per-round
     checkpoints are owned by ``scope``; only the returned result is not."""
-    barrier = PlanBarrier(scope.spark, tag="scc")
+    barrier = PlanBarrier()
     result: DataFrame | None = None
     rounds = 0
     while remaining.limit(1).count() > 0:

@@ -1,39 +1,36 @@
-"""Plan barrier: bounded truncation for iterative DataFrame loops.
+"""Plan cuts for iterative DataFrame loops, and their release.
 
-Measured in this environment (PySpark 4.1.2, local mode): chained
-``localCheckpoint(eager=True)`` — and even reliable
-``checkpoint(eager=True)`` — keep the LOGICAL plan flat but never
-truncate the physical RDD ancestry. A superstep that references its
-previous state twice therefore builds a dependency graph that doubles
-every step, and the per-step checkpoint cost explodes ~2-3x/step once
-the graph is large enough (~20 chained checkpoints: 0.7s → 195s/step).
-A parquet write + re-read is the only reliable hard barrier (constant
-0.3s/step over 40+ steps on tmpfs).
+A loop cuts its state once per superstep with ``local_cut``, a
+``localCheckpoint(eager=True)``: inside the step
+(``superstep.observed_checkpoint``) or through ``PlanBarrier.cut``.
 
-``PlanBarrier.cut(df)`` is the loop-side answer:
+* The cut keeps the logical plan flat, so Catalyst's analysis does not
+  grow with the step count.
+* It truncates the physical RDD ancestry too: the new state's RDD reads
+  only the checkpointed blocks. Measured with PySpark 4.1.2 on
+  ``local[3]``: kcore on a 100-edge path kept its state's
+  ``toRdd().toDebugString()`` at 298-378 chars over 20 steps.
+* It keeps ``hash(id, p)`` partitioning, so the next step's join on
+  ``id`` needs no exchange.
+* It does NOT reset the optimizer's size estimate, which the checkpoint
+  inherits from the plan it materialized; ``local_cut`` bounds it. A
+  step that joins its state with a frame built from that state squares
+  the estimate. Without the bound, ``label_propagation`` on a 60-vertex
+  path ran steps 1-19 at 0.35-0.9 s, then 1.8, 4.2, 11.0, 27.6, 87.8
+  and 250.5 s at steps 20-25, while its estimate grew from 25 to 68,239
+  bits over the first 12 steps. With the bound it stays at 135 bits.
+  This growth, not RDD ancestry, made chained checkpoints slow down
+  step after step; ``tests/test_loop_chain.py`` pins both.
 
-* most steps: ``localCheckpoint(eager=True)`` — cheap, keeps the
-  logical plan flat so Catalyst analysis stays O(1) per step;
-* every ``hard_every``-th cut: parquet round-trip to a session-scoped
-  scratch dir (alternating two paths, so disk use is bounded), which
-  resets the RDD ancestry before the walk cost is measurable
-  (2^8 = 256 nodes at the default cadence).
-
-On a real cluster the hard barrier lands on the executors' local dirs /
-HDFS checkpoint dir — the same cadence logic applies; the durable
-SuperstepRunner checkpoints (which are already parquet round-trips)
-count as hard barriers for free.
+A cut does not unregister itself: ``localCheckpoint`` leaves its RDD
+in the SparkContext's persistent-RDD map for the rest of the session.
+``release_checkpoint`` frees a superseded cut and
+``checkpoint_leaf_ids`` names the cuts a loop must not free.
 """
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-import uuid
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def checkpoint_leaf_ids(df: DataFrame | None) -> frozenset[int]:
@@ -69,10 +66,10 @@ def release_checkpoint(
     ``Dataset.localCheckpoint`` registers its materialized RDD in the
     SparkContext's persistentRdds map and nothing ever removes it (the
     DataFrame reports is_cached=False, so unpersist() paths skip it).
-    Combined with the untruncated-ancestry build bug, every superseded
-    checkpoint pins its whole dependency graph in the driver heap —
-    measured: the 2nd and 3rd identical PageRank runs in one session
-    were 2x slower with multi-second GC stalls until this release.
+    Every superseded checkpoint left there pins its blocks and its
+    plan objects — measured: the 2nd and 3rd identical PageRank runs
+    in one session were 2x slower with multi-second GC stalls until
+    this release.
 
     Walks ALL leaves of the analyzed plan, not just a top-level
     LogicalRDD: a state frame is often a Project/Filter OVER the
@@ -98,56 +95,53 @@ def release_checkpoint(
         pass  # non-checkpointed frame or internal API drift — harmless
 
 
-def _scratch_root(spark: SparkSession) -> str:
-    base = spark.conf.get("spark.local.dir", None) or tempfile.gettempdir()
-    first = base.split(",")[0]
-    return first if os.path.isdir(first) and os.access(first, os.W_OK) else tempfile.gettempdir()
+# spark.sql.defaultSizeInBytes: the size Spark assumes for a relation
+# it has no estimate for, above every threshold a plan decision
+# compares a size with
+UNKNOWN_SIZE = 2**63 - 1
+
+
+def local_cut(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, without an inherited size
+    estimate larger than ``UNKNOWN_SIZE``.
+
+    The checkpoint inherits ``df``'s optimizer size estimate, and a
+    join estimates the product of its sides. A step that joins its
+    state with a frame built from that state (messages, candidates, a
+    frontier) therefore squares the estimate: its bit length doubles
+    every step. Catalyst computes it in BigInt arithmetic each time it
+    plans a step, so after 20-30 steps planning one step takes
+    seconds, then minutes. Such a cut drops the estimate, and Spark
+    falls back to ``UNKNOWN_SIZE``: an estimate that large already
+    exceeded every threshold, so no plan decision changes."""
+    out = df.localCheckpoint(eager=True)
+    try:
+        plan = out._jdf.logicalPlan()  # the checkpoint's LogicalRDD
+        if plan.stats().sizeInBytes() <= UNKNOWN_SIZE:
+            return out
+        jvm, session = out.sparkSession._jvm, out.sparkSession._jsparkSession
+        plan = plan.copy(
+            plan.output(), plan.rdd(), plan.outputPartitioning(),  # allow-jvm-handle: LogicalRDD fields, not the Python RDD API
+            plan.outputOrdering(), plan.isStreaming(), plan.stream(),
+            session, jvm.scala.Option.empty(), jvm.scala.Some(plan.constraints()),
+        )
+        return DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(session, plan), out.sparkSession)
+    except Exception:
+        return out  # internal API drift: the estimate stays as inherited
 
 
 class PlanBarrier:
-    def __init__(
-        self,
-        spark: SparkSession,
-        hard_every: int = 8,
-        tag: str = "loop",
-    ) -> None:
-        self.spark = spark
-        self.hard_every = max(1, hard_every)
-        self._n = 0
-        self._dir: str | None = None
-        self._tag = tag
+    """Chained plan cuts for a loop that owns one state frame.
+
+    ``cut(df)`` materializes ``df`` with ``local_cut`` and releases the
+    previous cut, which the new one supersedes; the latest cut stays
+    live in ``_prev`` until the next one."""
+
+    def __init__(self) -> None:
         self._prev: DataFrame | None = None
 
-    def _paths(self) -> str:
-        if self._dir is None:
-            root = _scratch_root(self.spark)
-            self._dir = os.path.join(
-                root, f"plan_barrier_{self._tag}_{uuid.uuid4().hex[:12]}"
-            )
-            atexit.register(shutil.rmtree, self._dir, ignore_errors=True)
-        return os.path.join(self._dir, f"slot{self._n // self.hard_every % 2}")
-
-    def cut(self, df: DataFrame, hard: bool | None = None) -> DataFrame:
-        """Truncate ``df``'s plan. Soft (localCheckpoint) on most calls,
-        hard (parquet round-trip) every ``hard_every``-th call or when
-        ``hard=True``. The returned frame is materialized either way;
-        the PREVIOUS cut's checkpoint RDD is released (superseded)."""
-        self._n += 1
-        if hard is None:
-            hard = self._n % self.hard_every == 0
-        if hard:
-            path = self._paths()
-            df.write.mode("overwrite").parquet(path)
-            out = self.spark.read.parquet(path)
-            if df.is_cached:
-                df.unpersist()
-        else:
-            out = df.localCheckpoint(eager=True)
+    def cut(self, df: DataFrame) -> DataFrame:
+        out = local_cut(df)
         release_checkpoint(self._prev)
-        self._prev = out if not hard else None
+        self._prev = out
         return out
-
-    def mark_hard(self) -> None:
-        """Record an externally-performed hard barrier (e.g. the runner's
-        durable parquet checkpoint), resetting the soft-cut budget."""
-        self._n = 0

@@ -6,9 +6,10 @@ scheduling overhead, repeated 80 times (measured on this repo's PPR
 convergence query: 0.9s/superstep at p=16 vs 0.3s at p=2 on 2.1k
 vertices), while a 10^11-row state needs every core it can get. The
 built-in answer for ONE-SHOT plans is AQE coalescing, but AQE inside
-superstep loops re-plans every step (measured 2.3x/step — see
-spark-local notes in plans/barrier.py); these loops therefore pick a
-FIXED block count up front, proportional to the data.
+superstep loops re-plans every step (measured 2.3x slower per step on
+the pagerank loop; ``LoopScope.pin`` in plans/superstep.py turns it
+off); these loops therefore pick a FIXED block count up front,
+proportional to the data.
 
 ``auto_blocks`` is that choice: one block per ``rows_per_block`` input
 rows, clamped to [2, default_parallelism]. Operators call it with their

@@ -25,11 +25,16 @@ classpath — same DataFrame surface):
                                   streams, partition_result_gen.py:15-380)
   {dir}/metrics/                  (run_id, superstep, name, value)
 
-Checkpointing doubles as iterative-lineage truncation (SURVEY §4.3):
-re-reading the parquet snapshot cuts the logical plan that would
-otherwise grow linearly with supersteps. Without a checkpoint_dir the
-runtime falls back to ``localCheckpoint()`` (in-memory truncation, not
-resumable).
+Each superstep's new state is cut once with ``local_cut``, taken by
+the step itself (``observed_checkpoint``, then ``pre_truncated=True``)
+or by the runner through ``PlanBarrier.cut``; on a checkpointing step
+the re-read parquet snapshot replaces it. A cut keeps the logical
+plan, the physical RDD ancestry and the size estimate one step deep,
+so step cost does not grow with the step count (measured in
+``plans/barrier.py``). No other materialization runs: no parquet
+round-trip between checkpoints, no scratch directory. The metrics rows
+of the steps a checkpoint commits are appended with it, so a resumed
+run logs each step exactly once (``SuperstepRunner.run``).
 """
 
 from __future__ import annotations
@@ -44,10 +49,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from .barrier import PlanBarrier, checkpoint_leaf_ids, release_checkpoint
+from .barrier import PlanBarrier, checkpoint_leaf_ids, local_cut, release_checkpoint
 
 _AQE = "spark.sql.adaptive.enabled"
 _SHUFFLE = "spark.sql.shuffle.partitions"
+_BLOOM = "spark.sql.optimizer.runtime.bloomFilter.enabled"
 
 
 def _persisted_rdds(spark: SparkSession):
@@ -68,14 +74,20 @@ class LoopScope:
 
     def pin(self, p: int, pin_aqe: bool = True) -> None:
         """Loop conf: ``shuffle.partitions = p`` so every exchange of the
-        loop lands on hash(key, p), and AQE off (explicit partitioning,
-        no per-step re-planning) unless ``pin_aqe=False``. The values
-        seen before the first pin are restored at scope exit."""
-        pins = {_SHUFFLE: str(p)}
+        loop lands on hash(key, p), AQE off (explicit partitioning, no
+        per-step re-planning) unless ``pin_aqe=False``, and no runtime
+        bloom filter. A checkpoint inherits its plan's size estimate,
+        which a loop's joins multiply round after round (the
+        partitioner's assignment: 20,000 B at init, 1.09e13 B after 3
+        rounds), so the optimizer would inject a filter into a join of
+        loop state that costs a job and drops no row. The values seen
+        before the first pin are restored at scope exit, and a key the
+        session did not set is unset again."""
+        pins = {_SHUFFLE: str(p), _BLOOM: "false"}
         if pin_aqe:
             pins[_AQE] = "false"
         for key, value in pins.items():
-            self._saved_conf.setdefault(key, self.spark.conf.get(key))
+            self._saved_conf.setdefault(key, self.spark.conf.get(key, None))
             self.spark.conf.set(key, value)
 
     def cache(self, df: DataFrame) -> DataFrame:
@@ -113,7 +125,10 @@ class LoopScope:
                         rdd.unpersist(False)
         finally:
             for key, value in self._saved_conf.items():
-                self.spark.conf.set(key, value)
+                if value is None:
+                    self.spark.conf.unset(key)
+                else:
+                    self.spark.conf.set(key, value)
 
 
 @contextmanager
@@ -168,15 +183,15 @@ def observed_checkpoint(
 ) -> tuple[DataFrame, dict[str, float]]:
     """Materialize ``df`` with ``metrics`` riding the same job as
     observed aggregates: observe, then the optional column ``select``,
-    then ``cut`` (default ``localCheckpoint(eager=True)``; a
-    ``PlanBarrier.cut`` also works). One Spark job, no separate stats
-    scan. Returns (materialized frame, {name: value}); an aggregate over
-    no rows reads 0.0."""
+    then ``cut`` (default ``local_cut``; a ``PlanBarrier.cut`` also
+    works). One Spark job, no separate stats scan. Returns
+    (materialized frame, {name: value}); an aggregate over no rows
+    reads 0.0."""
     obs = Observation()
     out = df.observe(obs, *(col.alias(name) for name, col in metrics.items()))
     if select is not None:
         out = out.select(*select)
-    out = cut(out) if cut is not None else out.localCheckpoint(eager=True)
+    out = (cut or local_cut)(out)
     return out, {name: float(v or 0) for name, v in obs.get.items()}
 
 
@@ -216,13 +231,18 @@ class SuperstepRunner:
                     steps.append(int(d.split("=", 1)[1]))
         return max(steps) if steps else None
 
-    def _checkpoint(self, state: DataFrame, step: int) -> DataFrame:
-        if self.dir:
-            path = self._state_path(step)
-            state.write.mode("overwrite").parquet(path)
-            self._write_lineage(state, step, path)
-            return self.spark.read.parquet(path)
-        return state.localCheckpoint(eager=True)
+    def _checkpoint(self, state: DataFrame, step: int, metric_rows: list) -> DataFrame:
+        """Commit ``state`` as superstep ``step``: the snapshot, its
+        lineage, then the metrics rows of the steps it commits."""
+        path = self._state_path(step)
+        state.write.mode("overwrite").parquet(path)
+        self._write_lineage(state, step, path)
+        if metric_rows:
+            local_rows(
+                self.spark, metric_rows, "run_id string, superstep int, name string, value double"
+            ).write.mode("append").parquet(f"{self.dir}/metrics")
+            metric_rows.clear()
+        return self.spark.read.parquet(path)
 
     def _write_lineage(self, state: DataFrame, step: int, path: str) -> None:
         """Per-partition lineage with content: row count, each numeric
@@ -296,16 +316,13 @@ class SuperstepRunner:
         )
         return {r.name: r.value for r in rows}
 
-    def _log_metrics(self, step: int, metrics: dict[str, float]) -> None:
+    def _log_metrics(self, step: int, metrics: dict[str, float], metric_rows: list) -> None:
         record = {"superstep": step, **metrics}
         self.history.append(record)
         if self.sink is not None:
             self.sink.append(record)
         if self.dir:
-            rows = [(self.run_id, step, k, float(v)) for k, v in metrics.items()]
-            local_rows(
-                self.spark, rows, "run_id string, superstep int, name string, value double"
-            ).write.mode("append").parquet(f"{self.dir}/metrics")
+            metric_rows.extend((self.run_id, step, k, float(v)) for k, v in metrics.items())
 
     # -- the loop -------------------------------------------------------
 
@@ -321,22 +338,31 @@ class SuperstepRunner:
         """Iterate ``state, metrics = step_fn(state, step)`` until
         ``converged(metrics)`` or max_iter. Returns (final_state, steps_run).
 
-        ``step_fn`` performs the distributed pass (it should ``persist()``
-        the new state before running its own convergence action, so the
-        action doubles as materialization); ``converged`` is the
-        driver-side convergence check evaluated each superstep.
+        ``step_fn`` performs the distributed pass; ``converged`` is the
+        driver-side check evaluated each superstep. The new state is
+        cut once per step, so its plan stays one step deep:
+        ``pre_truncated=True`` says ``step_fn`` returns a frame it
+        already checkpointed (``observed_checkpoint``), otherwise the
+        runner cuts it with ``PlanBarrier.cut``. Every
+        ``checkpoint_every`` supersteps, and at the last one, a durable
+        checkpoint (parquet state, lineage, metrics) replaces the cut.
+        The runner releases each superseded state.
 
-        Durable checkpoints (parquet + lineage + metrics) happen every
-        ``checkpoint_every`` supersteps and at convergence; in between,
-        ``localCheckpoint`` truncates the growing iterative plan.
+        Each step's metrics record goes to ``history`` and the sink at
+        once, and to ``{dir}/metrics`` with the checkpoint that commits
+        the step, which is where a resume restarts. A failed run
+        therefore leaves no rows for the steps a resume re-runs, and
+        each committed step has one row per metric. One crash window
+        remains: a crash after a snapshot's ``_SUCCESS`` is written and
+        before its metrics append finishes drops the rows of the steps
+        that checkpoint commits, since a resume starts past them. No
+        window duplicates rows; a second run under the same run id
+        without ``resume`` appends a second set.
         """
-        barrier = PlanBarrier(
-            self.spark,
-            hard_every=min(8, self.checkpoint_every) if self.dir else 8,
-            tag=self.run_id,
-        )
+        barrier = PlanBarrier()
         start = 0
         state = init_state
+        metric_rows: list[tuple] = []  # steps no checkpoint has committed yet
         # checkpoints the CALLER owns (its init plan may sit on top of a
         # localCheckpoint'ed input, e.g. a materialized near-dup pair
         # graph): never release those — freeing an ancestor checkpoint
@@ -348,7 +374,7 @@ class SuperstepRunner:
                 state = self.spark.read.parquet(self._state_path(last))
                 start = last + 1
         if start == 0 and self.dir:
-            state = self._checkpoint(state, 0)
+            state = self._checkpoint(state, 0, metric_rows)
 
         import time as _time
 
@@ -362,42 +388,24 @@ class SuperstepRunner:
                     release_checkpoint(state, protect=foreign)
                 raise
             metrics["superstep_sec"] = round(_time.monotonic() - _t0, 3)
-            self._log_metrics(step, metrics)
+            self._log_metrics(step, metrics, metric_rows)
             done = converged(metrics) or step == max_iter
-            # ALWAYS truncate lineage each superstep: the logical plan
-            # otherwise nests every prior superstep and Catalyst
-            # planning/cache-lookup cost grows superlinearly (measured
-            # 10s/step at cadence 8 vs 1.5s/step truncating each step).
-            # Additionally, a HARD barrier (parquet round-trip) must run
-            # every few supersteps: localCheckpoint does not truncate
-            # the physical RDD ancestry in this Spark build, and past
-            # ~20 chained soft checkpoints the per-step cost explodes
-            # (see plans/barrier.py). The durable checkpoint IS a hard
-            # barrier; without a checkpoint_dir the barrier uses a
-            # session-scoped scratch dir.
             if self.dir and (done or step % self.checkpoint_every == 0):
-                snap = self._checkpoint(new_state, step)
+                snap = self._checkpoint(new_state, step, metric_rows)
                 if new_state.is_cached:
                     new_state.unpersist()
                 release_checkpoint(new_state, protect=foreign)
                 new_state = snap
-                barrier.mark_hard()
-            elif pre_truncated:
-                if step % barrier.hard_every == 0:
-                    cut = barrier.cut(new_state, hard=True)
-                    release_checkpoint(new_state, protect=foreign)  # replaced pre-truncated frame
-                    new_state = cut
-            else:
+            elif not pre_truncated:
                 trunc = barrier.cut(new_state)
                 if new_state.is_cached:
                     new_state.unpersist()
                 new_state = trunc
             if state.is_cached:
                 state.unpersist()
-            # superseded state: if it was a localCheckpoint (step_fn's
-            # own truncation or a soft barrier cut), release its pinned
-            # RDD — otherwise every superstep leaks one checkpointed RDD
-            # plus its whole (untruncated) ancestry into the driver heap.
+            # superseded state: release its checkpoint RDD (step_fn's
+            # own cut or the barrier's), else every superstep leaves
+            # one pinned in the session
             if state is not new_state:
                 release_checkpoint(state, protect=foreign)
             state = new_state

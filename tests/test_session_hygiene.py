@@ -65,6 +65,10 @@ ENTRY_POINTS = {
     # the fixture's 4-5-6 cycle never converges: three DP segments run
     "longest_path": (lambda s, e: dag.longest_path_lengths(s, e, max_iter=3), False),
     "longest_path_0": (lambda s, e: dag.longest_path_lengths(s, e, max_iter=0), False),
+    # src < dst drops the back edge of the 4-5-6 cycle
+    "topo_levels": (lambda s, e: dag.topological_levels(
+        s, e.filter(F.col("src_id") < F.col("dst_id"))), False),
+    "anchored_lpa": (lambda s, e: labelprop.anchored_label_propagation(s, e, _seeds(s)), False),
 }
 
 CASES = [(name, how) for name, (_, loops) in ENTRY_POINTS.items()
@@ -128,3 +132,16 @@ def test_operator_leaves_session_clean(spark, fail_at_step, name, how):
         assert dict(spark.conf.getAll) == conf, f"{name} left the session conf changed"
         new = _persisted(spark) - before
         assert not new, f"{name} leaked RDDs {sorted(new)} after a {how} failure"
+
+
+def test_topological_levels_cycle_leaves_session_clean(spark):
+    """The peel raises on the fixture's 4-5-6 cycle after it has cut
+    the state of the rounds it ran."""
+    edges = _edges(spark, poisoned=False)
+    conf = dict(spark.conf.getAll)
+    before = _persisted(spark)
+    with pytest.raises(ValueError, match="cycle"):
+        dag.topological_levels(spark, edges)
+    assert dict(spark.conf.getAll) == conf
+    new = _persisted(spark) - before
+    assert not new, f"topological_levels leaked RDDs {sorted(new)} on a cycle"

@@ -37,6 +37,44 @@ def test_resume_equals_uninterrupted(spark, tmp_path):
         assert math.isclose(got[k], want[k], rel_tol=0, abs_tol=1e-12), k
 
 
+def test_resume_logs_each_superstep_once(spark, tmp_path, monkeypatch):
+    """A run that fails past its last checkpoint and is resumed leaves
+    exactly one metrics row per (superstep, name): the failed run's
+    uncommitted steps are re-run by the resume, so they must not have
+    been written yet."""
+    from cim_framework_graph_partitioning_spark.plans.superstep import SuperstepRunner
+
+    df = _edges_df(spark, _random_edges(23, n=20, m=50))
+    ck = str(tmp_path / "ck_once")
+    run = SuperstepRunner.run
+
+    def failing_run(self, init_state, step_fn, *args, **kwargs):
+        def step(state, i):
+            if i == 6:
+                raise RuntimeError("superstep 6")
+            return step_fn(state, i)
+        return run(self, init_state, step, *args, **kwargs)
+
+    monkeypatch.setattr(SuperstepRunner, "run", failing_run)
+    try:
+        pagerank(spark, df, tol=0.0, max_iter=8, checkpoint_dir=ck,
+                 checkpoint_every=4, run_id="once")
+    except RuntimeError as err:
+        assert "superstep 6" in str(err)
+    else:
+        raise AssertionError("the run did not fail at superstep 6")
+    monkeypatch.setattr(SuperstepRunner, "run", run)
+    _, steps = pagerank(spark, df, tol=0.0, max_iter=8, checkpoint_dir=ck,
+                        checkpoint_every=4, resume=True, run_id="once")
+    assert steps == 8
+
+    rows = spark.read.parquet(f"{ck}/metrics").groupBy("superstep", "name").count().collect()
+    per_key = {(r.superstep, r.name): r["count"] for r in rows}
+    assert {n for _, n in per_key} == {"max_delta", "dangling_mass", "superstep_sec"}
+    assert {s for s, _ in per_key} == set(range(1, 9))
+    assert set(per_key.values()) == {1}, sorted(k for k, c in per_key.items() if c > 1)
+
+
 def test_checkpoint_artifacts_written(spark, tmp_path):
     triples = _random_edges(22, n=20, m=50)
     ck = str(tmp_path / "ck2")
