@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from ..plans.scale import auto_blocks
 from ..plans.barrier import checkpoint_leaf_ids, release_checkpoint
 from ..plans.superstep import SuperstepRunner, local_rows, loop_scope, observed_checkpoint
+from .edges import vertex_set
 
 
 def katz_centrality(
@@ -74,11 +75,7 @@ def katz_centrality(
 
     # loop conf BEFORE setup
     with loop_scope(spark, p) as scope:
-        verts = scope.cache(
-            edges.select(F.col("src_id").alias("id"))
-            .unionByName(edges.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
+        verts = scope.cache(vertex_set(edges))
         n = verts.count()
         if n == 0:
             return local_rows(spark, [], "id long, katz double"), 0

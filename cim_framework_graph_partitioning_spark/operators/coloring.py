@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
+from .edges import probe_edges, vertex_set
 from .mis import _prio_hash
 
 
@@ -68,27 +69,10 @@ def greedy_coloring(
     )
     # loop conf BEFORE setup (pagerank discipline)
     with loop_scope(spark, p) as scope:
-        # ONE exchange: repartition by the probe key e_u, dedup in place
-        # (hash(e_u) clusters every (e_v, e_u) group — kcore pattern)
-        _e = edges.select("src_id", "dst_id").filter(
-            F.col("src_id") != F.col("dst_id")
-        )
-        und = scope.cache(
-            _e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
-            .unionByName(
-                _e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
-            )
-            .repartition(p, "e_u")
-            .dropDuplicates(["e_v", "e_u"])
-        )
+        und = scope.cache(probe_edges(edges, p))  # one exchange: see probe_edges
         und.count()
 
-        verts = (
-            edges.select(F.col("src_id").alias("id"))
-            .unionByName(edges.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
-        init = verts.select(
+        init = vertex_set(edges).select(
             "id",
             _prio_hash(seed, hash_family).alias("h"),
             F.lit(None).cast("int").alias("color"),

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
+from .edges import weighted_pairs
 
 
 def louvain_undirected(edges: DataFrame) -> DataFrame:
@@ -53,25 +53,10 @@ def louvain_undirected(edges: DataFrame) -> DataFrame:
     un-checkpointed plan (r5 VERDICT wrong #2 — ~3 extra edge-table
     passes per round at scale).
     """
-    canon = (
-        edges.filter(F.col("src_id") != F.col("dst_id"))
-        .select(
-            F.least("src_id", "dst_id").alias("a"),
-            F.greatest("src_id", "dst_id").alias("b"),
-            "weight",
-        )
-        .groupBy("a", "b")
-        .agg(F.sum("weight").alias("w"))
-    )
-    und = canon.select(
-        F.col("a").alias("src_id"), F.col("b").alias("dst_id"), "w"
-    ).unionByName(
-        canon.select(
-            F.col("b").alias("src_id"), F.col("a").alias("dst_id"), "w"
-        )
-    ).localCheckpoint(eager=True)  # checkpoint BEFORE the probe:
-    # the fractional-weight check below scans the materialized table
-    # instead of executing the whole canon+union plan a second time
+    # checkpoint BEFORE the probe: the fractional-weight check below
+    # scans the materialized table instead of executing the whole
+    # canon+union plan a second time
+    und = weighted_pairs(edges).localCheckpoint(eager=True)
     frac = und.filter(F.col("w") != F.floor("w")).limit(1).count()
     if frac:
         raise ValueError(

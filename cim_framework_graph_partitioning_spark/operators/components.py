@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from ..plans.barrier import checkpoint_leaf_ids, release_checkpoint
 from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
 from ..plans.scale import auto_blocks
-from .edges import symmetrize
+from .edges import symmetrize, vertex_set
 
 
 def connected_components(
@@ -55,11 +55,7 @@ def connected_components(
         und = scope.cache(
             symmetrize(edges).select("src_id", "dst_id").repartition(p, "src_id")
         )
-        verts = scope.cache(
-            und.select(F.col("src_id").alias("id"))
-            .unionByName(und.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
+        verts = scope.cache(vertex_set(und))
         init = verts.select("id", F.col("id").alias("component"))
 
         def step_fn(labels: DataFrame, step: int):
@@ -121,11 +117,7 @@ def _cc_two_phase(
     """
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
     with loop_scope(spark, p) as scope:
-        verts = scope.cache(
-            edges.select(F.col("src_id").alias("id"))
-            .unionByName(edges.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
+        verts = scope.cache(vertex_set(edges))
         init = (
             edges.filter(F.col("src_id") != F.col("dst_id"))
             .select(

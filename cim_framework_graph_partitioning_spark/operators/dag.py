@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
 from ..plans.superstep import loop_scope, observed_checkpoint
+from .edges import vertex_set
 
 
 def topological_levels(
@@ -51,12 +52,7 @@ def topological_levels(
         e = scope.cache(
             edges.select("src_id", "dst_id").distinct().repartition(p, "src_id")
         )
-        state = (
-            e.select(F.col("src_id").alias("id"))
-            .unionByName(e.select(F.col("dst_id").alias("id")))
-            .distinct()
-            .select("id", F.lit(None).cast("int").alias("level"))
-        )
+        state = vertex_set(e).select("id", F.lit(None).cast("int").alias("level"))
         barrier = PlanBarrier()
         for level in range(max_iter):
             unpeeled = F.col("level").isNull()
@@ -108,16 +104,13 @@ def longest_path_lengths(
     Spark-job count per DP pass, which dominates wall time on the
     contracted graphs chain_decomposition peels."""
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    verts = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
     barrier = PlanBarrier()
     with loop_scope(spark) as scope:
         # the initial dist is the barrier's first cut: the next cut
         # releases it, and max_iter=0 returns it
-        dist = barrier.cut(verts.select("id", F.lit(0).alias("dist")).repartition(p, "id"))
+        dist = barrier.cut(
+            vertex_set(edges).select("id", F.lit(0).alias("dist")).repartition(p, "id")
+        )
         e = scope.cache(
             edges.select("src_id", "dst_id").distinct().repartition(p, "src_id")
         )
@@ -161,13 +154,7 @@ def _assert_contracted_size(edges: DataFrame, max_vertices: int, op: str) -> Non
     operators (the reference's run on anchor graphs of tens of vertices,
     graph.py:157-207): their driver loops collect one row per path hop.
     Enforce the contract mechanically instead of by docstring promise."""
-    n = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-        .limit(max_vertices + 1)
-        .count()
-    )
+    n = vertex_set(edges).limit(max_vertices + 1).count()
     if n > max_vertices:
         raise ValueError(
             f"{op} is a contracted-graph operator (driver loop per path "

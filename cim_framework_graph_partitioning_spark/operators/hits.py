@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from ..plans.scale import auto_blocks
 from ..plans.barrier import release_checkpoint
 from ..plans.superstep import LoopScope, SuperstepRunner, local_rows, loop_scope, observed_checkpoint
+from .edges import vertex_set
 
 
 def hits(
@@ -95,11 +96,7 @@ def _hits_inner(
     metrics_sink: list | None,
 ) -> tuple[DataFrame, int]:
     spark = scope.spark
-    verts = scope.cache(
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
+    verts = scope.cache(vertex_set(edges))
     n = verts.count()
     if n == 0:
         return local_rows(spark, [], "id long, hub double, auth double"), 0

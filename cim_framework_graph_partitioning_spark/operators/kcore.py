@@ -38,9 +38,9 @@ possible coreness + 1, not degree.
 Scale shape:
 
 * The undirected edge list is symmetrized + deduped once, cached
-  hash-partitioned by dst_id: the per-step join (neighbor values onto
-  edges) reuses that exchange and only the (vertex, value) table
-  shuffles.
+  hash-partitioned by the probe key (``edges.probe_edges``): the
+  per-step join (neighbor values onto edges) reuses that exchange and
+  only the (vertex, value) table shuffles.
 * Per superstep: the histogram aggregation exchange on (v, value) and
   the window exchange on v — both over histogram-sized data after the
   map-side combine.
@@ -56,19 +56,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
-
-
-def undirected_edges(edges: DataFrame) -> DataFrame:
-    """(src_id, dst_id[, ...]) -> symmetric deduped (src_id, dst_id),
-    self-loops dropped (a self-loop never changes coreness under the
-    h-operator and the peel convention excludes it)."""
-    e = edges.select("src_id", "dst_id").filter(F.col("src_id") != F.col("dst_id"))
-    return (
-        e.unionByName(
-            e.select(F.col("dst_id").alias("src_id"), F.col("src_id").alias("dst_id"))
-        )
-        .distinct()
-    )
+from .edges import probe_edges
 
 
 def coreness(
@@ -85,7 +73,9 @@ def coreness(
     """Returns (cores(id, core), supersteps_run) — exact coreness.
 
     The input is treated as undirected: edges are symmetrized and
-    deduplicated before the fixpoint iteration.
+    deduplicated before the fixpoint iteration, and self-loops dropped
+    (a self-loop never changes coreness under the h-operator and the
+    peel convention excludes it).
     """
     p = num_blocks or auto_blocks(
         edges.count(), spark.sparkContext.defaultParallelism
@@ -94,22 +84,7 @@ def coreness(
     # loop conf BEFORE setup so the cached static table and the init
     # aggregation land on hash(key, p) partitioning directly
     with loop_scope(spark, p) as scope:
-        # rename once: the init state derives from the same edge plan, so
-        # the per-step join would otherwise be an ambiguous self-join.
-        # ONE exchange: repartition by the probe key e_u, then dedup in
-        # place (hash(e_u) clusters every (e_v, e_u) group, so no second
-        # exchange; the former distinct-then-repartition paid two).
-        e = edges.select("src_id", "dst_id").filter(
-            F.col("src_id") != F.col("dst_id")
-        )
-        und = scope.cache(
-            e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
-            .unionByName(
-                e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
-            )
-            .repartition(p, "e_u")
-            .dropDuplicates(["e_v", "e_u"])
-        )
+        und = scope.cache(probe_edges(edges, p))  # one exchange: see probe_edges
         und.count()
 
         # degree init: groupBy lands on hash(id, p) under the pinned

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
 from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
-from .edges import symmetrize
+from .edges import symmetrize, vertex_set
 
 
 def label_propagation(
@@ -40,11 +40,7 @@ def label_propagation(
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
     with loop_scope(spark, p) as scope:
         und = scope.cache(symmetrize(edges).repartition(p, "src_id"))
-        verts = scope.cache(
-            und.select(F.col("src_id").alias("id"))
-            .unionByName(und.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
+        verts = scope.cache(vertex_set(und))
         init = verts.select("id", F.col("id").alias("label"))
 
         w = Window.partitionBy("dst_id").orderBy(
@@ -116,62 +112,57 @@ def anchored_label_propagation(
 
     Returns (labels(id, label) with -1 for uncovered vertices,
     total_steps). Per step: one join + one groupBy-min over the cached
-    symmetrized edge table — the same scale shape as plain LPA.
+    symmetrized edge table — the same scale shape as plain LPA — and
+    one job, which also counts the vertices the step absorbed.
     """
     p = auto_blocks(edges.count(), spark.sparkContext.defaultParallelism)
-    und = symmetrize(edges).repartition(p, "src_id").persist()
-    verts = (
-        und.select(F.col("src_id").alias("id"))
-        .unionByName(und.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
-    barrier = PlanBarrier()
-    labels = barrier.cut(
-        verts.join(anchors.select("id", F.col("label").alias("_al")), "id", "left")
-        .select("id", F.col("_al").alias("label"))
-    )
     if waves is None:
         waves = [F.lit(True)]
     total_steps = 0
-    for wave_pred in waves:
-        eligible = und.filter(wave_pred)
-        limit = steps_per_wave if steps_per_wave is not None else max_iter_per_wave
-        for _ in range(limit):
-            msgs = (
-                labels.filter(F.col("label").isNotNull())
-                .hint("shuffle_hash")
-                .join(eligible, F.col("id") == F.col("src_id"))
-                .groupBy("dst_id")
-                .agg(F.min("label").alias("cand"))
-            )
-            new_labels = (
-                labels.join(msgs, labels.id == msgs.dst_id, "left")
-                .select(
-                    "id", F.coalesce(F.col("label"), F.col("cand")).alias("label")
+    with loop_scope(spark, p) as scope:
+        und = scope.cache(symmetrize(edges).repartition(p, "src_id"))
+        # each cut releases the one it supersedes; on a raise the scope
+        # releases the last one too
+        barrier = PlanBarrier()
+        labels = barrier.cut(
+            vertex_set(und)
+            .join(anchors.select("id", F.col("label").alias("_al")), "id", "left")
+            .select("id", F.col("_al").alias("label"))
+        )
+        for wave_pred in waves:
+            eligible = und.filter(wave_pred)
+            limit = steps_per_wave if steps_per_wave is not None else max_iter_per_wave
+            for _ in range(limit):
+                msgs = (
+                    labels.filter(F.col("label").isNotNull())
+                    .hint("shuffle_hash")
+                    .join(eligible, F.col("id") == F.col("src_id"))
+                    .groupBy("dst_id")
+                    .agg(F.min("label").alias("cand"))
                 )
-                .persist()
-            )
-            newly = (
-                new_labels.join(
-                    labels.select("id", F.col("label").alias("prev")), "id"
+                labels, m = observed_checkpoint(
+                    labels.join(msgs, labels.id == msgs.dst_id, "left").select(
+                        "id",
+                        F.coalesce(F.col("label"), F.col("cand")).alias("label"),
+                        F.col("label").alias("prev"),
+                    ),
+                    select=("id", "label"),
+                    cut=barrier.cut,
+                    newly=F.sum(
+                        F.when(F.col("prev").isNull() & F.col("label").isNotNull(), 1)
+                        .otherwise(0)
+                    ),
                 )
-                .filter(F.col("prev").isNull() & F.col("label").isNotNull())
-                .count()
-            )
-            trunc = barrier.cut(new_labels)
-            new_labels.unpersist()
-            labels = trunc
-            total_steps += 1
-            if newly == 0 and steps_per_wave is None:
-                break
-    if require_total:
-        uncovered = labels.filter(F.col("label").isNull()).count()
-        if uncovered:
-            raise AssertionError(
-                f"anchored LPA coverage violated: {uncovered} vertices unlabeled"
-            )
+                total_steps += 1
+                if m["newly"] == 0 and steps_per_wave is None:
+                    break
+        if require_total:
+            uncovered = labels.filter(F.col("label").isNull()).count()
+            if uncovered:
+                raise AssertionError(
+                    f"anchored LPA coverage violated: {uncovered} vertices unlabeled"
+                )
     out = labels.select(
         "id", F.coalesce(F.col("label"), F.lit(-1)).cast("long").alias("label")
     )
-    und.unpersist()
     return out, total_steps

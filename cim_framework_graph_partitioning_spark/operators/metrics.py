@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .edges import symmetrize
+from .edges import undirected_pairs
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -31,13 +31,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     Both edge directions of each undirected edge enter the sums
     (the standard convention: the correlation is over ordered endpoint
     pairs, making it symmetric without a half-weight correction)."""
-    und = (
-        symmetrize(edges)
-        .select("src_id", "dst_id")
-        .filter(F.col("src_id") != F.col("dst_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = undirected_pairs(edges).localCheckpoint(eager=True)
     deg = und.groupBy(F.col("src_id").alias("id")).agg(
         F.count("*").cast("long").alias("deg")
     )
@@ -81,10 +75,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     community-sorted array so the floating addition order is pinned
     (same discipline as BM25)."""
     und = (
-        symmetrize(edges)
-        .select("src_id", "dst_id")
-        .filter(F.col("src_id") != F.col("dst_id"))
-        .distinct()
+        undirected_pairs(edges)
         .filter(F.col("src_id") < F.col("dst_id"))
         .localCheckpoint(eager=True)
     )

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
+from .edges import probe_edges, vertex_set
 
 UNDECIDED, IN_MIS, EXCLUDED = 0, 1, 2
 
@@ -81,31 +82,13 @@ def maximal_independent_set(
     # static table and init land on hash(key, p) partitioning and every
     # per-step exchange is sized to the data, not the session.
     with loop_scope(spark, p) as scope:
-        # ONE exchange: repartition by the probe key e_u, dedup in place
-        # (hash(e_u) clusters every (e_v, e_u) group)
-        e = edges.select("src_id", "dst_id").filter(
-            F.col("src_id") != F.col("dst_id")
-        )
-        und = scope.cache(
-            e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
-            .unionByName(
-                e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
-            )
-            .repartition(p, "e_u")
-            .dropDuplicates(["e_v", "e_u"])
-        )
+        und = scope.cache(probe_edges(edges, p))  # one exchange: see probe_edges
         und.count()
 
         # endpoints of the RAW edge table: a vertex with only a self-loop
         # vanishes from `und` but still exists (isolated ⇒ joins the MIS);
         # under the pinned conf the distinct lands on hash(id, p)
-        # directly, so the former explicit repartition is gone
-        verts = (
-            edges.select(F.col("src_id").alias("id"))
-            .unionByName(edges.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
-        init = verts.select(
+        init = vertex_set(edges).select(
             "id",
             _prio_hash(seed, hash_family).alias("h"),
             F.lit(UNDECIDED).cast("int").alias("status"),

@@ -60,7 +60,7 @@ from pyspark.sql import functions as F
 from ..plans.barrier import PlanBarrier
 from ..plans.scale import auto_blocks
 from ..plans.superstep import local_rows, loop_scope
-from .edges import symmetrize
+from .edges import symmetrize, vertex_set
 
 
 # Cost-model ablations, mirroring the reference's partition_mode
@@ -204,11 +204,7 @@ def balanced_partition(
         # round (guide §2.4: two operations keyed the same way share one
         # exchange).
         und = scope.cache(symmetrize(edges).repartition(p, "dst_id"))
-        verts = scope.cache(
-            und.select(F.col("src_id").alias("id"))
-            .unionByName(und.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
+        verts = scope.cache(vertex_set(und))
 
         barrier = PlanBarrier()
         part0 = (

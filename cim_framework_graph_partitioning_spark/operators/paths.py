@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.superstep import SuperstepRunner, loop_scope, observed_checkpoint
+from .edges import vertex_set
 
 
 def shortest_paths(
@@ -75,16 +76,11 @@ def shortest_paths(
         )
         e.count()
 
-        verts = (
-            e.select(F.col("src_id").alias("id"))
-            .unionByName(e.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
         s = sources.select(F.col(sources.columns[0]).alias("id")).distinct()
         # init: 0.0 at sources present in the graph, NULL elsewhere; every
         # source starts in the frontier (changed=true)
         init = (
-            verts.join(s.withColumn("_s", F.lit(True)), "id", "left")
+            vertex_set(e).join(s.withColumn("_s", F.lit(True)), "id", "left")
             .select(
                 "id",
                 F.when(F.col("_s"), F.lit(0.0)).otherwise(F.lit(None).cast("double")).alias("dist"),

@@ -68,6 +68,7 @@ from pyspark.sql import functions as F
 from ..plans.barrier import PlanBarrier, release_checkpoint
 from ..plans.scale import auto_blocks
 from ..plans.superstep import LoopScope, local_rows, loop_scope, observed_checkpoint
+from .edges import vertex_set
 
 
 def strongly_connected_components(
@@ -93,11 +94,7 @@ def strongly_connected_components(
             .filter(F.col("src_id") != F.col("dst_id"))
             .distinct()
         )
-        verts = (
-            edges.select(F.col("src_id").alias("id"))
-            .unionByName(edges.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
+        verts = vertex_set(edges)
         p = num_blocks or auto_blocks(
             verts.count(),
             spark.sparkContext.defaultParallelism,

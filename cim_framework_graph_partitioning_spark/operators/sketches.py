@@ -150,7 +150,7 @@ def neighborhood_sketches(
     from ..plans.barrier import release_checkpoint
     from ..plans.scale import auto_blocks
     from ..plans.superstep import loop_scope
-    from .kcore import undirected_edges
+    from .edges import probe_edges, vertex_set
 
     p = num_blocks or auto_blocks(
         edges.count(), spark.sparkContext.defaultParallelism
@@ -162,19 +162,10 @@ def neighborhood_sketches(
         )
 
     with loop_scope(spark) as scope:
-        und = scope.cache(
-            undirected_edges(edges)
-            .select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
-            .repartition(p, "e_u")
-        )
+        und = scope.cache(probe_edges(edges, p))  # one exchange: see probe_edges
         und.count()
-        verts = (
-            edges.select(F.col("src_id").alias("id"))
-            .unionByName(edges.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
         state = (
-            verts.select(
+            vertex_set(edges).select(
                 "id",
                 F.array(_id_hash(F.col("id"), seed, hash_family)).alias("sk"),
             )

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.superstep import SuperstepRunner, local_rows, loop_scope, observed_checkpoint
+from .edges import vertex_set, weighted_pairs
 
 
 def label_spreading(
@@ -70,16 +71,7 @@ def _label_spreading_inner(
     checkpoint_every, resume, run_id, metrics_sink,
 ):
     spark = scope.spark
-    e = edges.filter(F.col("src_id") != F.col("dst_id")).select(
-        F.least("src_id", "dst_id").alias("a"),
-        F.greatest("src_id", "dst_id").alias("b"),
-        "weight",
-    ).groupBy("a", "b").agg(F.sum("weight").alias("w"))
-    und = e.select(
-        F.col("a").alias("src_id"), F.col("b").alias("dst_id"), "w"
-    ).unionByName(
-        e.select(F.col("b").alias("src_id"), F.col("a").alias("dst_id"), "w")
-    )
+    und = weighted_pairs(edges)
     deg = und.groupBy(F.col("src_id").alias("id")).agg(
         F.sum("w").alias("d")
     )
@@ -98,18 +90,13 @@ def _label_spreading_inner(
     )
     norm.count()
 
-    verts = (
-        edges.select(F.col("src_id").alias("id"))
-        .unionByName(edges.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
     y = scope.cache(
         seeds.select(
             F.col(seeds.columns[0]).alias("id"),
             F.col(seeds.columns[1]).alias("label"),
         )
         .distinct()
-        .join(verts, "id", "left_semi")
+        .join(vertex_set(edges), "id", "left_semi")
         .select("id", "label", F.lit(1.0).alias("y"))
         .repartition(p, "id")
     )

@@ -19,24 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.superstep import LoopScope, loop_scope
-from .edges import symmetrize
-
-
-def _simple_undirected(edges: DataFrame) -> DataFrame:
-    """Symmetrized, self-loop-free, deduped edge set — MATERIALIZED
-    (localCheckpoint) because every triangle plan scans it from several
-    subtrees (degree agg, orientation, wedge closure): without the
-    barrier Spark re-executes the upstream graph-construction join once
-    per subtree (measured 3.4s/scan warm on the 39k-edge co-part gate
-    graph — the dominant cost of the clustering query was recomputing
-    its own input)."""
-    return (
-        symmetrize(edges)
-        .select("src_id", "dst_id")
-        .filter(F.col("src_id") != F.col("dst_id"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+from .edges import undirected_pairs
 
 
 def _oriented(und: DataFrame) -> DataFrame:
@@ -56,15 +39,21 @@ def _oriented(und: DataFrame) -> DataFrame:
     )
 
 
-# The public entry points return a materialized result, so the
-# intermediate checkpoints (the simple edge set and its orientation) are
-# released when the call returns instead of pinned for the session.
+# The public entry points checkpoint the simple undirected edge set
+# (``undirected_pairs``) because every triangle plan scans it from
+# several subtrees (degree agg, orientation, wedge closure): without the
+# cut Spark re-executes the upstream graph-construction join once per
+# subtree (measured 3.4s/scan warm on the 39k-edge co-part gate graph —
+# the dominant cost of the clustering query was recomputing its own
+# input). They return a materialized result, so the intermediate
+# checkpoints (the simple edge set and its orientation) are released
+# when the call returns instead of pinned for the session.
 
 
 def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count. Returns 1-row DataFrame (n_triangles long)."""
     with loop_scope(edges.sparkSession) as scope:
-        und = scope.own(_simple_undirected(edges))
+        und = scope.checkpoint(undirected_pairs(edges))
         return (
             _closed_wedges(und, scope)
             .agg(F.count("*").alias("n_triangles"))
@@ -75,7 +64,7 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation counts (id, n_triangles)."""
     with loop_scope(edges.sparkSession) as scope:
-        und = scope.own(_simple_undirected(edges))
+        und = scope.checkpoint(undirected_pairs(edges))
         return _triangles_per_vertex(und, scope).localCheckpoint(eager=True)
 
 
@@ -100,7 +89,7 @@ def local_clustering_coefficient(edges: DataFrame) -> DataFrame:
     only new work on top of ``triangles_per_vertex`` is one degree
     aggregation and a vertex-keyed left join)."""
     with loop_scope(edges.sparkSession) as scope:
-        und = scope.own(_simple_undirected(edges))
+        und = scope.checkpoint(undirected_pairs(edges))
         deg = und.groupBy(F.col("src_id").alias("id")).agg(
             F.count("*").cast("long").alias("degree")
         )

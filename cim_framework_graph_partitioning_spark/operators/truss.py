@@ -53,7 +53,8 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.superstep import LoopScope, SuperstepRunner, loop_scope, observed_checkpoint
-from .triangles import _closed_wedges, _simple_undirected
+from .edges import undirected_pairs
+from .triangles import _closed_wedges
 
 
 def _edge_incidence(und: DataFrame, scope: LoopScope) -> DataFrame:
@@ -117,7 +118,9 @@ def trussness(
     # the loop conf is pinned only after setup: the triangle enumeration
     # and the incidence cache run under the session conf
     with loop_scope(spark) as scope:
-        und = _simple_undirected(edges)
+        # the returned frame reads this checkpoint (canon), so the
+        # scope does not own it
+        und = undirected_pairs(edges).localCheckpoint(eager=True)
         canon = (
             und.filter(F.col("src_id") < F.col("dst_id"))
             .select(F.col("src_id").alias("eu"), F.col("dst_id").alias("ev"))

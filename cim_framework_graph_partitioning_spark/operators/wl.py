@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from ..plans.scale import auto_blocks
 from ..plans.superstep import SuperstepRunner, loop_scope
+from .edges import probe_edges, vertex_set
 
 _MOD = 1 << 60
 
@@ -74,30 +75,13 @@ def wl_refinement(
         edges.count(), spark.sparkContext.defaultParallelism
     )
     with loop_scope(spark, p) as scope:
-        # ONE exchange: repartition by the probe key e_u, dedup in place
-        # (hash(e_u) clusters every (e_v, e_u) group — kcore pattern)
-        e = edges.select("src_id", "dst_id").filter(
-            F.col("src_id") != F.col("dst_id")
-        )
-        und = scope.cache(
-            e.select(F.col("src_id").alias("e_v"), F.col("dst_id").alias("e_u"))
-            .unionByName(
-                e.select(F.col("dst_id").alias("e_v"), F.col("src_id").alias("e_u"))
-            )
-            .repartition(p, "e_u")
-            .dropDuplicates(["e_v", "e_u"])
-        )
+        und = scope.cache(probe_edges(edges, p))  # one exchange: see probe_edges
         und.count()
 
-        verts = (
-            edges.select(F.col("src_id").alias("id"))
-            .unionByName(edges.select(F.col("dst_id").alias("id")))
-            .distinct()
-        )
         deg = und.groupBy(F.col("e_v").alias("id")).agg(
             F.count("*").cast("long").alias("_d")
         )
-        init = verts.join(deg, "id", "left").select(
+        init = vertex_set(edges).join(deg, "id", "left").select(
             "id",
             _digest(F.coalesce(F.col("_d"), F.lit(0)).cast("string"))
             .alias("color"),

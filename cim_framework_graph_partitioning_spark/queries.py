@@ -27,7 +27,7 @@ from .operators.dedup import (
     ngram_jaccard_pairs,
     simhash_near_duplicates,
 )
-from .operators.edges import derive_edges
+from .operators.edges import derive_edges, vertex_set
 from .operators.hits import hits
 from .operators.kcore import coreness
 from .operators.truss import trussness
@@ -295,12 +295,9 @@ def q_lpa_anchored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.labelprop import anchored_label_propagation
 
     e = co_supplier_edges(spark, sf_dir)
-    vs = (
-        e.select(F.col("src_id").alias("id"))
-        .unionByName(e.select(F.col("dst_id").alias("id")))
-        .distinct()
+    anchors = vertex_set(e).filter(F.col("id") % 7 == 0).select(
+        "id", F.col("id").alias("label")
     )
-    anchors = vs.filter(F.col("id") % 7 == 0).select("id", F.col("id").alias("label"))
     labels, _ = anchored_label_propagation(
         spark,
         e,
@@ -2109,12 +2106,7 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.metrics import modularity
 
     e = co_part_edges(spark, sf_dir, order_mod=3)
-    labels = (
-        e.select(F.col("src_id").alias("id"))
-        .unionByName(e.select(F.col("dst_id").alias("id")))
-        .distinct()
-        .select("id", F.pmod(F.col("id"), F.lit(4)).alias("label"))
-    )
+    labels = vertex_set(e).select("id", F.pmod(F.col("id"), F.lit(4)).alias("label"))
     return modularity(e, labels).select(
         "n_edges", "n_communities", F.round("modularity", 6).alias("modularity")
     )
@@ -3286,12 +3278,7 @@ def q_pagerank_warm(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the same init + unroll. Convergence-equivalence (warm
     fixpoint == cold fixpoint) is pytest territory."""
     e = supplier_part_edges(spark, sf_dir)
-    verts = (
-        e.select(F.col("src_id").alias("id"))
-        .unionByName(e.select(F.col("dst_id").alias("id")))
-        .distinct()
-    )
-    init = verts.select(
+    init = vertex_set(e).select(
         "id", (F.lit(1.0) + F.pmod(F.col("id"), F.lit(3))).alias("rank")
     )
     ranks, _ = pagerank(

@@ -145,3 +145,27 @@ def test_topological_levels_cycle_leaves_session_clean(spark):
     assert dict(spark.conf.getAll) == conf
     new = _persisted(spark) - before
     assert not new, f"topological_levels leaked RDDs {sorted(new)} on a cycle"
+
+
+@pytest.mark.parametrize("how", ["coverage", "wave"])
+def test_anchored_lpa_failures_leave_session_clean(spark, how):
+    """Anchored LPA raises its coverage assert on an uncovered isolated
+    pair, or a wave predicate fails at run time, after the call has
+    cached its edge table and cut its labels."""
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 1.0), (2, 3, 1.0), (3, 4, 1.0), (8, 9, 1.0)],
+        "src_id long, dst_id long, weight double")
+    anchors = spark.createDataFrame([(0, 0), (4, 4)], "id long, label long")
+    if how == "coverage":
+        kwargs, expected = {"require_total": True}, AssertionError
+    else:
+        # assert_true is null when it holds and raises when it does not
+        kwargs = {"waves": [F.assert_true(F.col("src_id") < 0).isNull()]}
+        expected = Exception
+    conf = dict(spark.conf.getAll)
+    before = _persisted(spark)
+    with pytest.raises(expected):
+        labelprop.anchored_label_propagation(spark, edges, anchors, **kwargs)
+    assert dict(spark.conf.getAll) == conf
+    new = _persisted(spark) - before
+    assert not new, f"anchored LPA leaked RDDs {sorted(new)} on a {how} failure"
