@@ -24,41 +24,55 @@ _IMPORT_RE = {
     # the referenced symbol. Kept RE2-compatible on purpose: the DuckDB
     # corpus_edges oracle replays these same patterns character for
     # character (queries.py _SQL_CORPUS_EDGES), so stick to (?m), (?:),
-    # \b, explicit char classes — no lookbehind/backrefs.
-    "python": re.compile(r"^\s*(?:import|from)\s+([A-Za-z_][A-Za-z0-9_.]*)", re.M),
-    "c": re.compile(r'^\s*#\s*include\s*[<"]([^>"]+)[>"]', re.M),
-    "go": re.compile(r'^\s*import\s+"([^"]+)"', re.M),
+    # \b, explicit char classes — no lookbehind/backrefs. re.A gives
+    # Python Java's ASCII \s, \w and \b (extract_refs input contract).
+    "python": re.compile(
+        r"^\s*(?:import|from)\s+([A-Za-z_][A-Za-z0-9_.]*)", re.M | re.A
+    ),
+    "c": re.compile(r'^\s*#\s*include\s*[<"]([^>"]+)[>"]', re.M | re.A),
+    "go": re.compile(r'^\s*import\s+"([^"]+)"', re.M | re.A),
     # `import x from 'm'` / side-effect `import 'm'` / `require('m')`
     "javascript": re.compile(
-        r"(?:\bfrom\s+|\brequire\(\s*|^\s*import\s+)['\"]([^'\"]+)['\"]", re.M
+        r"(?:\bfrom\s+|\brequire\(\s*|^\s*import\s+)['\"]([^'\"]+)['\"]", re.M | re.A
     ),
     "java": re.compile(
-        r"^\s*import\s+(?:static\s+)?([A-Za-z_][A-Za-z0-9_.]*)\s*;", re.M
+        r"^\s*import\s+(?:static\s+)?([A-Za-z_][A-Za-z0-9_.]*)\s*;", re.M | re.A
     ),
-    "rust": re.compile(r"^\s*(?:pub\s+)?use\s+([A-Za-z_][A-Za-z0-9_:]*)", re.M),
+    "rust": re.compile(r"^\s*(?:pub\s+)?use\s+([A-Za-z_][A-Za-z0-9_:]*)", re.M | re.A),
 }
 # TypeScript import syntax is JavaScript's.
 _IMPORT_RE["typescript"] = _IMPORT_RE["javascript"]
 
 
 def extract_refs(content: F.Column, lang: F.Column) -> F.Column:
-    """Per-file list of referenced symbols (imports/includes), by lang.
+    r"""Per-file list of referenced symbols (imports/includes), by lang.
 
     Pure JVM expression: a CASE over ``regexp_extract_all`` with the
-    per-language pattern (the ``(?m)`` flag inlined). This removes the
-    former ArrowEvalPython node — and with it the JVM→Python→JVM Arrow
-    round-trip of every file body — from the edge-derivation scan stage
-    (guide §4.1: built-ins over UDFs). The patterns are deliberately
-    RE2-compatible (no lookbehind/backrefs), so Java, Python and the
-    DuckDB oracle's RE2 all match them identically; findall with one
-    capture group ≡ regexp_extract_all(..., 1), both non-overlapping
+    per-language pattern (the ``(?d)(?m)`` flags inlined). This removes
+    the former ArrowEvalPython node — and with it the JVM→Python→JVM
+    Arrow round-trip of every file body — from the edge-derivation scan
+    stage (guide §4.1: built-ins over UDFs). The patterns are
+    deliberately RE2-compatible (no lookbehind/backrefs); findall with
+    one capture group ≡ regexp_extract_all(..., 1), both non-overlapping
     left-to-right scans.
+
+    Input contract, which Java, the ``re.ASCII`` pandas reference and
+    the DuckDB oracle's RE2 share:
+
+    * a line ends at ``\n`` only. ``(?d)`` (Java's UNIX_LINES) keeps
+      ``^`` from also firing after a lone ``\r``, U+0085 or U+2028;
+    * ``\s`` is ASCII whitespace; Unicode spaces such as U+00A0 are
+      not whitespace.
+
+    The one difference from RE2: Java and Python count ``\v`` (U+000B)
+    as ``\s`` and RE2 does not, so ``"\vimport a"`` yields ``['a']``
+    here and ``[]`` in the oracle.
     """
     expr = F.array().cast(T.ArrayType(T.StringType()))
     for lg, rx in _IMPORT_RE.items():
         if lg == "typescript":
             continue  # same compiled pattern object as javascript
-        pat = "(?m)" + rx.pattern
+        pat = "(?d)(?m)" + rx.pattern
         matched = F.regexp_extract_all(content, F.lit(pat), 1)
         cond = (
             lang.isin(lg, "typescript") if lg == "javascript" else lang == lg

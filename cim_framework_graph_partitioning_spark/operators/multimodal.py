@@ -1,54 +1,15 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The Spark-side plumbing is real and tested — schema, partitioning, Arrow
-batch shapes, mapInPandas UDF signatures. The codec layer has four REAL
-end-to-end paths and one stub:
+Two kernels, both shardable:
 
-* BMP (uncompressed 24-bit BI_RGB) payloads are decoded for real by a
-  pure-numpy parser (``decode_bmp``; round-trippable via ``encode_bmp``)
-  — no external image library needed, golden-pixel tested.
-* PNG payloads are decoded for real at EVERY static-spec
-  depth/color/interlace combination (1/2/4/8/16-bit where allowed x
-  gray/RGB/palette/gray+alpha/RGBA x non-interlaced/Adam7) by a
-  stdlib-zlib + numpy parser (``decode_png``; round-trippable via
-  ``encode_png``) — full chunk/CRC walk, all five scanline filters
-  reconstructed per (sub-)image, vectorized PLTE lookup, MSB-first
-  sub-byte unpack, 16-bit high-byte fold; round-trip tested per
-  filter, depth, and interlace.
-* JPEG (baseline sequential SOF0 AND progressive huffman SOF2, 8-bit
-  grayscale, YCbCr 4:4:4 or 4:2:0) payloads are decoded for real by a
-  pure-numpy huffman+IDCT decoder (``jpeg.decode_jpeg``;
-  ``jpeg.encode_jpeg`` / ``jpeg.encode_jpeg_progressive`` return
-  payload AND the exact expected decode, so both lossy round trips are
-  bit-exact-tested).
-* WAV (RIFF) payloads are decoded for real by a pure-python chunk
-  parser (``decode_wav``; round-trippable via ``encode_wav``) —
-  PCM 8/16-bit PLUS three real COMPRESSED encodings from
-  ``operators.audio``: G.711 μ-law, G.711 A-law (both all-256-codes
-  bijection-tested), and mono IMA ADPCM (lossy round trip bit-exact
-  via the encoder-replay contract). Duration / RMS / zero-crossing /
-  amplitude-histogram features, golden-sample tested.
-* AVI (RIFF container, Motion-JPEG 'vids' stream) payloads are decoded
-  for real by ``video.decode_avi_mjpeg`` — the container walk reuses
-  the WAV chunk grammar (plus nested LISTs) and every frame runs the
-  numpy JPEG decoder; ``video.encode_avi_mjpeg`` replays the per-frame
-  quantization loss so the lossy VIDEO round trip is bit-exact-tested.
-  ``extract_frames`` samples real frames by byte-slicing '00dc' chunks
-  (no pixel decode on the sampling path).
-* remaining formats (arithmetic-coded/lossless JPEG, library-bound
-  compressed audio — MP3/AAC/FLAC/Vorbis — and non-MJPEG video —
-  MP4/H.264/VP9 and friends) are STUBBED — they genuinely need codec libraries or out-of-scope
-  decode machinery this container lacks: with ``allow_fake=False`` the
-  kernel raises ``NotImplementedError``; with the default
-  ``allow_fake=True`` it computes a deterministic fake 'decode'
-  (bucketed byte histogram, numpy-vectorized across the whole Arrow
-  batch) so the downstream feature pipeline is exercised end-to-end.
+* ``decode_and_featurize`` maps each payload to a 16-dim feature, the
+  L1-normalised byte histogram by ``position % 16``. One mapInPandas
+  kernel, vectorized over the whole Arrow batch (one bincount over the
+  concatenated bytes, no per-payload Python).
+* ``frame_sample`` fans video rows out to sampled frame indices from
+  the metadata alone (sequence + explode).
 
-Dispatch is by DECODABILITY, not magic bytes: a payload that merely
-starts with "BM"/"RIFF" but fails to parse falls back to the fake path
-(or raises under ``allow_fake=False``) instead of failing the job.
-
-Media table schema:
+Media table schema (``synthesize_media`` builds one):
     media(media_id long, kind string, payload binary,
           meta struct<width:int, height:int, sample_rate:int, n_frames:int>)
 """
@@ -61,599 +22,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_frames", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 _FEATURE_DIM = 16
 FEATURE_SCHEMA = "media_id long, kind string, feature array<double>, n_bytes long"
 
 
-# --- BMP codec (pure numpy, no external libraries) -------------------------
-
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """Decode an uncompressed 24-bit BI_RGB BMP (BITMAPINFOHEADER — the
-    overwhelmingly common layout). Returns (height, width, 3) uint8 in
-    BGR channel order, top-down row order. Raises ValueError on any
-    other BMP variant or a truncated/non-BMP payload."""
-    if len(payload) < 54 or payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    data_off = int.from_bytes(payload[10:14], "little")
-    hdr_size = int.from_bytes(payload[14:18], "little")
-    if hdr_size < 40:
-        raise ValueError("unsupported BMP header (pre-BITMAPINFOHEADER)")
-    width = int.from_bytes(payload[18:22], "little", signed=True)
-    height = int.from_bytes(payload[22:26], "little", signed=True)
-    planes = int.from_bytes(payload[26:28], "little")
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    if planes != 1 or bpp != 24 or compression != 0 or width <= 0 or height == 0:
-        raise ValueError(f"unsupported BMP variant bpp={bpp} comp={compression}")
-    bottom_up = height > 0
-    h = abs(height)
-    row_stride = (width * 3 + 3) & ~3  # rows pad to 4-byte boundaries
-    if len(payload) < data_off + row_stride * h:
-        raise ValueError("truncated BMP")
-    rows = np.frombuffer(payload, np.uint8, row_stride * h, data_off)
-    img = rows.reshape(h, row_stride)[:, : width * 3].reshape(h, width, 3)
-    return img[::-1] if bottom_up else img
-
-
-def encode_bmp(img: np.ndarray) -> bytes:
-    """Encode (h, w, 3) uint8 BGR pixels as a bottom-up 24-bit BI_RGB
-    BMP — the exact inverse of ``decode_bmp`` (round-trip tested)."""
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, c = img.shape
-    assert c == 3, "expect BGR channels"
-    row_stride = (w * 3 + 3) & ~3
-    body = np.zeros((h, row_stride), dtype=np.uint8)
-    body[:, : w * 3] = img[::-1].reshape(h, w * 3)  # bottom-up
-    data = body.tobytes()
-    off = 14 + 40
-    header = (
-        b"BM"
-        + (off + len(data)).to_bytes(4, "little")
-        + b"\x00\x00\x00\x00"
-        + off.to_bytes(4, "little")
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + (24).to_bytes(2, "little")
-        + (0).to_bytes(4, "little")
-        + len(data).to_bytes(4, "little")
-        + (2835).to_bytes(4, "little") * 2  # 72 DPI
-        + (0).to_bytes(4, "little") * 2
-    )
-    return header + data
-
-
-def _image_features(img: np.ndarray) -> np.ndarray:
-    """16-dim feature from decoded pixels (any image codec): [w, h,
-    mean BGR, std BGR, 8-bin normalized gray histogram]."""
-    h, w, _ = img.shape
-    flat = img.reshape(-1, 3).astype("float64")
-    gray = flat.mean(axis=1)
-    hist, _ = np.histogram(gray, bins=8, range=(0.0, 256.0))
-    hist = hist / max(1, gray.size)
-    return np.concatenate(
-        ([float(w), float(h)], flat.mean(axis=0), flat.std(axis=0), hist)
-    )
-
-
-# --- PNG codec (stdlib zlib + numpy, no external libraries) ----------------
-
-_PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _paeth(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
-    """Paeth predictor (PNG filter 4), vectorized over its inputs."""
-    p = a.astype(np.int32) + b.astype(np.int32) - c.astype(np.int32)
-    pa, pb, pc = np.abs(p - a), np.abs(p - b), np.abs(p - c)
-    return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
-
-
-# Adam7 interlace pass grid: (x_start, y_start, x_step, y_step)
-_ADAM7 = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def _png_recon(raw: np.ndarray, n_rows: int, stride: int, bpp: int) -> np.ndarray:
-    """Undo PNG scanline filtering for one (sub-)image. ``raw`` is the
-    filtered stream (n_rows x (1 + stride) bytes), ``bpp`` the filter
-    byte-lane stride (channels x bytes-per-sample — PNG filters operate
-    on BYTES, so 16-bit images just use wider lanes). Sub is a per-row
-    modular cumsum (vectorized); Up one vectorized add against the
-    prior row; Average/Paeth are sequential in x by definition, so
-    those rows walk pixel groups with the byte lanes vectorized."""
-    raw = raw.reshape(n_rows, stride + 1)
-    npix = stride // bpp
-    recon = np.zeros((n_rows, stride), dtype=np.uint8)
-    prior = np.zeros(stride, dtype=np.uint8)
-    for y in range(n_rows):
-        ftype = int(raw[y, 0])
-        line = raw[y, 1:].astype(np.int32)
-        if ftype == 0:  # None
-            rec = line
-        elif ftype == 1:  # Sub: modular cumsum per byte lane
-            rec = line.reshape(npix, bpp).cumsum(axis=0) % 256
-            rec = rec.reshape(stride)
-        elif ftype == 2:  # Up
-            rec = (line + prior) % 256
-        elif ftype in (3, 4):  # Average / Paeth: sequential in x
-            rec2 = np.zeros((npix, bpp), dtype=np.int32)
-            line2 = line.reshape(npix, bpp)
-            prior2 = prior.reshape(npix, bpp).astype(np.int32)
-            a = np.zeros(bpp, dtype=np.int32)
-            c = np.zeros(bpp, dtype=np.int32)
-            for x in range(npix):
-                b = prior2[x]
-                if ftype == 3:
-                    pred = (a + b) >> 1
-                else:
-                    pred = _paeth(a, b, c)
-                a = (line2[x] + pred) % 256
-                rec2[x] = a
-                c = b
-            rec = rec2.reshape(stride)
-        else:
-            raise ValueError(f"bad PNG filter type {ftype}")
-        prior = rec.astype(np.uint8)
-        recon[y] = prior
-    return recon
-
-
-def decode_png(payload: bytes) -> np.ndarray:
-    """Decode a static PNG at EVERY spec depth/color/interlace
-    combination (color types 0 gray, 2 RGB, 3 palette, 4 gray+alpha,
-    6 RGBA; depths 1/2/4/8/16 where the spec allows them;
-    non-interlaced or Adam7) using only stdlib zlib + numpy: chunk walk
-    with CRC validation, IDAT inflate, and full reconstruction of all
-    five scanline filters (None/Sub/Up/Average/Paeth) per (sub-)image;
-    palette images resolve through one vectorized PLTE lookup;
-    sub-byte rows unpack MSB-first (gray levels scale to full 8-bit);
-    16-bit samples fold to 8 via the standard high-byte take. Returns
-    (height, width, 3) uint8 in BGR channel order to match
-    ``decode_bmp`` (alpha dropped, gray replicated). Raises ValueError
-    on a corrupt payload. Per-image decode cost sits inside the
-    mapInPandas kernel, not in any registered hot path."""
-    import zlib
-
-    if len(payload) < 45 or payload[:8] != _PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos = 8
-    ihdr = None
-    plte = None
-    idat = bytearray()
-    while pos + 12 <= len(payload):
-        size = int.from_bytes(payload[pos : pos + 4], "big")
-        ctype = payload[pos + 4 : pos + 8]
-        body = payload[pos + 8 : pos + 8 + size]
-        if len(body) < size:
-            raise ValueError("truncated PNG chunk")
-        crc = int.from_bytes(payload[pos + 8 + size : pos + 12 + size], "big")
-        if zlib.crc32(ctype + body) & 0xFFFFFFFF != crc:
-            raise ValueError("PNG chunk CRC mismatch")
-        if ctype == b"IHDR":
-            ihdr = body
-        elif ctype == b"PLTE":
-            plte = body
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        pos += 12 + size
-    if ihdr is None or len(ihdr) < 13 or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w = int.from_bytes(ihdr[0:4], "big")
-    h = int.from_bytes(ihdr[4:8], "big")
-    depth, color, comp, filt, interlace = ihdr[8:13]
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
-    # the full static-PNG depth matrix (spec §11.2.2): gray allows
-    # 1/2/4/8/16, palette 1/2/4/8, the multi-channel types 8/16
-    allowed = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
-               4: (8, 16), 6: (8, 16)}
-    if (
-        channels is None or depth not in allowed[color] or comp != 0
-        or filt != 0 or interlace not in (0, 1)
-    ):
-        raise ValueError(
-            f"unsupported PNG variant depth={depth} color={color} "
-            f"interlace={interlace}"
-        )
-    if color == 3 and (plte is None or len(plte) % 3 or not len(plte)):
-        raise ValueError("palette PNG missing/bad PLTE chunk")
-    if w <= 0 or h <= 0:
-        raise ValueError("bad PNG dimensions")
-    try:
-        raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    except zlib.error as e:
-        raise ValueError(f"PNG IDAT inflate failed: {e}") from e
-    # filter byte-lane stride: channels x bytes-per-sample, floor 1
-    # (sub-byte depths filter on whole packed bytes, spec §9.2)
-    bpp = max(1, channels * depth // 8)
-    pxdim = channels * (depth // 8) if depth >= 8 else 1
-
-    def sub_stride(wp: int) -> int:  # scanline bytes for wp pixels
-        return wp * pxdim if depth >= 8 else -(-wp * depth // 8)
-
-    def sub_pixels(part: np.ndarray, hp: int, wp: int) -> np.ndarray:
-        """Reconstruct one (sub-)image to (hp, wp, pxdim) samples —
-        sub-byte rows unpack MSB-first after unfiltering."""
-        rec = _png_recon(part, hp, sub_stride(wp), bpp)
-        if depth >= 8:
-            return rec.reshape(hp, wp, pxdim)
-        bits = np.unpackbits(rec, axis=1)[:, : wp * depth]
-        bits = bits.reshape(hp, wp, depth).astype(np.int32)
-        weights = 1 << np.arange(depth - 1, -1, -1)
-        return (bits * weights).sum(axis=2).astype(np.uint8)[..., None]
-
-    if interlace == 0:
-        if raw.size != h * (sub_stride(w) + 1):
-            raise ValueError("PNG scanline size mismatch")
-        pxb = sub_pixels(raw, h, w)
-    else:  # Adam7: seven independently-filtered sub-images
-        pxb = np.zeros((h, w, pxdim), dtype=np.uint8)
-        pos = 0
-        for x0, y0, dx, dy in _ADAM7:
-            wp = max(0, -(-(w - x0) // dx))
-            hp = max(0, -(-(h - y0) // dy))
-            if wp == 0 or hp == 0:
-                continue  # empty pass for small images, no bytes at all
-            need = hp * (sub_stride(wp) + 1)
-            if raw.size < pos + need:
-                raise ValueError("PNG interlace stream truncated")
-            pxb[y0::dy, x0::dx] = sub_pixels(raw[pos : pos + need], hp, wp)
-            pos += need
-        if pos != raw.size:
-            raise ValueError("PNG scanline size mismatch")
-    if depth == 16:  # big-endian pairs; standard 16→8 high-byte take
-        px = pxb[..., 0::2].copy()
-    elif depth < 8 and color == 0:  # scale gray levels to full 8-bit
-        px = (pxb.astype(np.int32) * (255 // ((1 << depth) - 1))).astype(
-            np.uint8
-        )
-    else:
-        px = pxb
-    if color == 2:
-        return px[..., ::-1].copy()  # RGB -> BGR
-    if color == 3:
-        pal = np.frombuffer(plte, dtype=np.uint8).reshape(-1, 3)  # RGB rows
-        idx = px[..., 0]
-        if int(idx.max(initial=0)) >= pal.shape[0]:
-            raise ValueError("palette index out of range")
-        return pal[idx][..., ::-1].copy()  # one vectorized lookup -> BGR
-    if color == 6:
-        return px[..., 2::-1].copy()  # drop alpha, RGB -> BGR
-    return np.repeat(px[..., :1], 3, axis=2)  # gray(±alpha) -> BGR
-
-
-def encode_png(
-    img: np.ndarray,
-    filter_type: int | str = 0,
-    depth: int = 8,
-    interlace: int = 0,
-) -> bytes:
-    """Encode (h, w, 3) uint8 BGR pixels as an RGB PNG — the inverse of
-    ``decode_png`` (round-trip tested). ``filter_type`` selects the
-    scanline filter: 0-4, or "mixed" to cycle through all five
-    (exercises every reconstruction path in the decoder).
-    ``depth=16`` expands each sample as ``x * 257`` (the standard
-    8→16 widening), so the decoder's high-byte take round-trips the
-    source bit-exactly; ``interlace=1`` emits Adam7 (seven
-    independently-filtered sub-images). Filtering at encode time is
-    fully vectorized per row (predictors are computed from the known
-    raw pixels)."""
-    import zlib
-
-    img = np.asarray(img, dtype=np.uint8)
-    h, w, c = img.shape
-    assert c == 3, "expect BGR channels"
-    if depth not in (8, 16) or interlace not in (0, 1):
-        raise ValueError("depth must be 8/16, interlace 0/1")
-    rgb = img[..., ::-1]  # BGR -> RGB
-    if depth == 16:
-        samp = rgb.astype(np.uint16) * 257
-        pxb = np.zeros((h, w, 6), dtype=np.uint8)
-        pxb[..., 0::2] = (samp >> 8).astype(np.uint8)  # big-endian pairs
-        pxb[..., 1::2] = (samp & 0xFF).astype(np.uint8)
-    else:
-        pxb = rgb
-    bpp = pxb.shape[2]
-
-    def filt_sub(sub: np.ndarray) -> bytes:
-        hp, wp = sub.shape[:2]
-        raw = sub.reshape(hp, wp * bpp).astype(np.int32)
-        zero = np.zeros(bpp, dtype=np.int32)
-        out = bytearray()
-        for y in range(hp):
-            ft = (y % 5) if filter_type == "mixed" else int(filter_type)
-            line = raw[y]
-            a = np.concatenate([zero, line[:-bpp]])  # left, per byte lane
-            b = raw[y - 1] if y else np.zeros(wp * bpp, dtype=np.int32)
-            c_ = (
-                np.concatenate([zero, b[:-bpp]])
-                if y
-                else np.zeros(wp * bpp, dtype=np.int32)
-            )
-            if ft == 0:
-                filt = line
-            elif ft == 1:
-                filt = line - a
-            elif ft == 2:
-                filt = line - b
-            elif ft == 3:
-                filt = line - ((a + b) >> 1)
-            else:
-                filt = line - _paeth(a, b, c_)
-            out.append(ft)
-            out += (filt % 256).astype(np.uint8).tobytes()
-        return bytes(out)
-
-    if interlace == 0:
-        body = filt_sub(pxb)
-    else:
-        body = b"".join(
-            filt_sub(pxb[y0::dy, x0::dx])
-            for x0, y0, dx, dy in _ADAM7
-            if pxb[y0::dy, x0::dx].size  # empty passes emit no bytes
-        )
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            len(data).to_bytes(4, "big")
-            + ctype
-            + data
-            + (zlib.crc32(ctype + data) & 0xFFFFFFFF).to_bytes(4, "big")
-        )
-
-    ihdr = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big")
-        + bytes([depth, 2, 0, 0, interlace])  # RGB, deflate, adaptive
-    )
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(body))
-        + chunk(b"IEND", b"")
-    )
-
-
-# --- WAV codec (pure python/numpy, no external libraries) ------------------
-
-def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
-    """Decode a RIFF/WAVE payload: PCM (format 1) 8- or 16-bit — the
-    plain uncompressed layout every tool emits — plus the three REAL
-    compressed encodings from ``operators.audio``: G.711 μ-law
-    (format 7), G.711 A-law (format 6), and mono IMA ADPCM
-    (format 0x11, using the fact chunk's sample count to trim block
-    padding). Returns (samples, sample_rate) where samples is float64
-    shaped (n_frames, n_channels) normalized to [-1, 1]. Raises
-    ValueError on any other format or a truncated/non-WAV payload."""
-    if len(payload) < 44 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    fmt = None
-    data = None
-    fact_samples = None
-    pos = 12
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"fmt " and len(body) >= 16:
-            fmt = body
-        elif cid == b"fact" and len(body) >= 4:
-            fact_samples = int.from_bytes(body[:4], "little")
-        elif cid == b"data":
-            if len(body) < size:
-                raise ValueError("truncated WAV data chunk")
-            data = body
-        pos += 8 + size + (size & 1)  # chunks pad to even offsets
-    if fmt is None or data is None:
-        raise ValueError("WAV missing fmt/data chunk")
-    audio_format = int.from_bytes(fmt[0:2], "little")
-    n_channels = int.from_bytes(fmt[2:4], "little")
-    sample_rate = int.from_bytes(fmt[4:8], "little")
-    bits = int.from_bytes(fmt[14:16], "little")
-    if n_channels < 1:
-        raise ValueError("bad WAV channel count")
-    if audio_format == 1 and bits == 16:
-        raw = np.frombuffer(data, dtype="<i2", count=len(data) // 2)
-        samples = raw.astype("float64") / 32768.0
-    elif audio_format == 1 and bits == 8:  # 8-bit PCM is unsigned
-        raw = np.frombuffer(data, dtype=np.uint8)
-        samples = (raw.astype("float64") - 128.0) / 128.0
-    elif audio_format in (6, 7) and bits == 8:  # G.711 A-law / μ-law
-        from .audio import alaw_decode, ulaw_decode
-
-        dec = ulaw_decode if audio_format == 7 else alaw_decode
-        samples = (
-            dec(np.frombuffer(data, dtype=np.uint8)).astype("float64")
-            / 32768.0
-        )
-    elif audio_format == 0x11 and bits == 4 and n_channels == 1:
-        from .audio import adpcm_decode
-
-        block_align = int.from_bytes(fmt[12:14], "little")
-        if block_align < 5:
-            raise ValueError("bad ADPCM block align")
-        spb = (block_align - 4) * 2 + 1
-        n_samp = (
-            fact_samples
-            if fact_samples is not None
-            else (len(data) // block_align) * spb
-        )
-        samples = (
-            adpcm_decode(data, block_align, n_samp).astype("float64")
-            / 32768.0
-        )
-    else:
-        raise ValueError(
-            f"unsupported WAV variant fmt={audio_format} bits={bits}"
-        )
-    n_frames = samples.size // n_channels
-    return samples[: n_frames * n_channels].reshape(n_frames, n_channels), sample_rate
-
-
-def encode_wav(samples: np.ndarray, sample_rate: int) -> bytes:
-    """Encode (n_frames, n_channels) float64 in [-1, 1] as 16-bit PCM
-    RIFF/WAVE — the inverse of ``decode_wav`` (round-trip tested)."""
-    samples = np.asarray(samples, dtype="float64")
-    if samples.ndim == 1:
-        samples = samples[:, None]  # mono
-    n_frames, n_channels = samples.shape
-    pcm = np.clip(np.round(samples * 32767.0), -32768, 32767).astype("<i2")
-    data = pcm.tobytes()
-    block_align = n_channels * 2
-    fmt = (
-        (1).to_bytes(2, "little")
-        + n_channels.to_bytes(2, "little")
-        + sample_rate.to_bytes(4, "little")
-        + (sample_rate * block_align).to_bytes(4, "little")
-        + block_align.to_bytes(2, "little")
-        + (16).to_bytes(2, "little")
-    )
-    body = b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    body += b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"WAVE" + body
-
-
-def _wav_features(samples: np.ndarray, sample_rate: int) -> np.ndarray:
-    """16-dim feature from decoded PCM: [sample_rate, n_channels,
-    n_frames, duration_sec, rms, zero-crossing rate, peak, mean,
-    8-bin normalized |amplitude| histogram] — all numpy-vectorized."""
-    n_frames, n_channels = samples.shape
-    mono = samples.mean(axis=1) if n_frames else np.zeros(0)
-    rms = float(np.sqrt(np.mean(mono**2))) if n_frames else 0.0
-    zcr = (
-        float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-        if n_frames > 1
-        else 0.0
-    )
-    hist, _ = np.histogram(np.abs(mono), bins=8, range=(0.0, 1.0))
-    hist = hist / max(1, mono.size)
-    return np.concatenate(
-        (
-            [
-                float(sample_rate),
-                float(n_channels),
-                float(n_frames),
-                n_frames / sample_rate if sample_rate else 0.0,
-                rms,
-                zcr,
-                float(np.abs(mono).max()) if n_frames else 0.0,
-                float(mono.mean()) if n_frames else 0.0,
-            ],
-            hist,
-        )
-    )
-
-
-# feature extraction decodes at most this many evenly-strided frames per
-# video so per-payload pixel cost is bounded regardless of clip length
-_VIDEO_SAMPLE_FRAMES = 8
-
-
-def _video_features(
-    frames: list[np.ndarray], fps: float, n_total: int
-) -> np.ndarray:
-    """16-dim feature from decoded MJPEG frames (an evenly-strided
-    sample of the clip): [w, h, n_frames_total, fps, duration_sec,
-    mean gray, std gray, motion (mean |frame delta|), 8-bin normalized
-    gray histogram] — pixel math numpy-vectorized over the stacked
-    sample."""
-    if not frames:
-        return np.concatenate(
-            ([0.0, 0.0, float(n_total), fps, n_total / fps if fps else 0.0,
-              0.0, 0.0, 0.0], np.zeros(8))
-        )
-    stack = np.stack(frames).astype("float64")  # (n, h, w, 3)
-    gray = stack.mean(axis=3)
-    motion = (
-        float(np.abs(np.diff(gray, axis=0)).mean()) if len(frames) > 1 else 0.0
-    )
-    hist, _ = np.histogram(gray, bins=8, range=(0.0, 256.0))
-    hist = hist / max(1, gray.size)
-    h, w = frames[0].shape[:2]
-    return np.concatenate(
-        (
-            [float(w), float(h), float(n_total), fps,
-             n_total / fps if fps else 0.0,
-             float(gray.mean()), float(gray.std()), motion],
-            hist,
-        )
-    )
-
-
-def _try_decode(payload: bytes) -> np.ndarray | None:
-    """Attempt every real codec; None means 'no real path decodes this'.
-    Decodability — not magic bytes — decides the route, so a corrupt
-    'BM'/'RIFF'/PNG prefix degrades to the fake path instead of failing
-    the whole mapInPandas task. Codecs raise ValueError on malformed
-    input by contract, but IndexError is caught too as defense in depth
-    for short-buffer indexing on adversarially corrupt payloads (one
-    bad record must never kill a 100-TB scan task). RIFF payloads
-    disambiguate on the form type: 'WAVE' takes the PCM path, 'AVI '
-    the MJPEG video path."""
-    if payload[:2] == b"BM":
-        try:
-            return _image_features(decode_bmp(payload))
-        except (ValueError, IndexError):
-            return None
-    if payload[:8] == _PNG_SIG:
-        try:
-            return _image_features(decode_png(payload))
-        except (ValueError, IndexError):
-            return None
-    if payload[:2] == b"\xff\xd8":
-        from .jpeg import decode_jpeg
-
-        try:
-            return _image_features(decode_jpeg(payload))
-        except (ValueError, IndexError):
-            return None
-    if payload[:4] == b"RIFF":
-        if payload[8:12] == b"AVI ":
-            from .video import decode_avi_mjpeg, parse_avi
-
-            try:
-                n_raw = len(parse_avi(payload)[0])
-                stride = max(1, -(-n_raw // _VIDEO_SAMPLE_FRAMES))
-                return _video_features(*decode_avi_mjpeg(payload, stride))
-            except (ValueError, IndexError):
-                return None
-        try:
-            return _wav_features(*decode_wav(payload))
-        except (ValueError, IndexError):
-            return None
-    return None
-
-
 def _fake_features(payloads: list[bytes]) -> np.ndarray:
-    """Deterministic fake decode for non-BMP payloads, vectorized over
-    the WHOLE batch: feature[j] = L1-normalized sum of bytes at
-    positions ≡ j (mod 16). One bincount over the concatenated flat
-    byte array — no per-payload Python loop."""
+    """Byte-histogram feature, vectorized over the WHOLE batch:
+    feature[j] = L1-normalized sum of bytes at positions ≡ j (mod 16);
+    an empty payload gives all zeros. One bincount over the
+    concatenated flat byte array — no per-payload Python loop."""
     lens = np.array([len(p) for p in payloads], dtype="int64")
     n = len(payloads)
     out = np.zeros((n, _FEATURE_DIM), dtype="float64")
@@ -672,109 +50,33 @@ def _fake_features(payloads: list[bytes]) -> np.ndarray:
     return out
 
 
-def decode_and_featurize(media: DataFrame, allow_fake: bool = True) -> DataFrame:
+def decode_and_featurize(media: DataFrame) -> DataFrame:
     """mapInPandas pipeline: binary payload → fixed-dim feature vector.
 
-    Batch shape: each Arrow batch is a pandas DataFrame with a
-    ``payload`` column of bytes objects. Decodable BMP/PNG/JPEG payloads
-    take the real pixel paths, decodable WAV payloads the real RIFF/PCM
-    path, decodable MJPEG-AVI payloads the real video path (frame-
-    strided so pixel cost is bounded per clip; each decode is
-    numpy-vectorized internally — the per-payload loop is inherent to
-    variable-length binary and stays out of every registered hot path). Everything else is the stub: raise with
-    ``allow_fake=False`` (an explicit no-fakes request is honored even
-    if an external codec library happens to be importable — no silent
-    fake features, ever), else a deterministic fake feature computed
-    batch-vectorized (one bincount over the concatenated bytes, no
-    per-payload loop).
+    Each Arrow batch is a pandas DataFrame with a ``payload`` column of
+    bytes objects (null reads as empty). The whole batch goes through
+    one ``_fake_features`` call; ``n_bytes`` is the payload length.
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = [p or b"" for p in pdf["payload"]]
-            nbytes = np.array([len(p) for p in payloads], dtype="int64")
-            real = [_try_decode(p) for p in payloads]
-            if not allow_fake and any(r is None for r in real):
-                raise NotImplementedError(
-                    "payload not decodable by the built-in BMP/PNG/JPEG/"
-                    "WAV/MJPEG-AVI codecs and allow_fake=False; pass "
-                    "allow_fake=True for deterministic fake features"
-                )
-            fake = _fake_features([
-                p for p, r in zip(payloads, real) if r is None
-            ])
-            feats: list[np.ndarray] = []
-            fi = 0
-            for r in real:
-                if r is not None:
-                    feats.append(r)  # real codec path (BMP/PNG/WAV)
-                else:
-                    feats.append(fake[fi])
-                    fi += 1
             yield pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
                     "kind": pdf["kind"],
-                    "feature": feats,
-                    "n_bytes": nbytes,
+                    "feature": list(_fake_features(payloads)),
+                    "n_bytes": np.array([len(p) for p in payloads], dtype="int64"),
                 }
             )
 
     return media.mapInPandas(kernel, FEATURE_SCHEMA)
 
 
-def extract_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """REAL video frame sampling: parse each MJPEG-AVI payload's RIFF
-    container and emit every ``every_n``-th stored frame as its own row
-    — (media_id, frame_idx, frame_payload) where frame_payload is a
-    standalone baseline JPEG (``jpeg.decode_jpeg`` decodes it directly).
-
-    Sampling is byte slicing on the container walk (``video.parse_avi``)
-    — no entropy/pixel decode happens on this path, so cost scales with
-    container bytes, not pixels. Non-AVI video payloads (stub formats)
-    contribute no rows. The frame fan-out happens inside mapInPandas,
-    so output rows shard with the input partitioning."""
-    if every_n < 1:
-        raise ValueError("every_n must be >= 1")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .video import parse_avi
-
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            outs: list[bytes] = []
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    raw = parse_avi(bytes(p or b""))[0]
-                except ValueError:
-                    continue  # not a real (MJPEG-AVI) video payload
-                for i in range(0, len(raw), every_n):
-                    ids.append(int(mid))
-                    idxs.append(i)
-                    outs.append(raw[i])
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_payload": pd.Series(outs, dtype=object),
-                }
-            )
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload")
-        .mapInPandas(
-            kernel, "media_id long, frame_idx int, frame_payload binary"
-        )
-    )
-
-
 def frame_sample(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing from METADATA alone: one output row
-    per sampled frame index (``extract_frames`` is the payload-driven
-    real path that attaches actual frame bytes). Pure column ops — the
-    frame index fan-out is an explode, which shards."""
+    """Video frame sampling from METADATA alone: one output row per
+    sampled frame index, every ``every_n``-th of ``meta.n_frames``. Pure
+    column ops — the frame index fan-out is an explode, which shards."""
     n = F.coalesce(F.col("meta.n_frames"), F.lit(0))
     idx = F.sequence(F.lit(0), F.greatest(n - 1, F.lit(0)), F.lit(every_n))
     return (

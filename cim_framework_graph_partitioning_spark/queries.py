@@ -1444,14 +1444,12 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (previously pytest-only): a deterministic synthesized media table
     (payload = raw bytes of sha256-hex repeated 4x — self-synthesized
     input, the corpus-query precedent) flows through
-    ``decode_and_featurize``. No payload parses under any real codec,
-    so every row takes the batch-vectorized FAKE path — bucketed byte
-    histogram, L1-normalized — whose arithmetic is replicable in DuckDB
+    ``decode_and_featurize``: the batch-vectorized bucketed byte
+    histogram, L1-normalized, whose arithmetic is replicable in DuckDB
     hex math (bucket sums are integral, the one float division is the
     same IEEE op both sides). Features flatten via posexplode so the
-    compare stays scalar-valued. The REAL codec paths are lossy-codec
-    pytest territory (bit-exact encoder-replay tests); this row pins
-    the Spark-side kernel plumbing: batch shapes, dispatch, schema."""
+    compare stays scalar-valued. This row pins the Spark-side kernel
+    plumbing: batch shapes and schema."""
     from .operators.multimodal import decode_and_featurize, synthesize_media
 
     media = synthesize_media(spark, n=96, seed=42)
@@ -1478,10 +1476,8 @@ ORDER BY media_id, frame_idx
 def q_media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-driven video frame-sampling plumbing (`frame_sample`):
     the sequence+explode fan-out over the synthesized media table's
-    video rows (meta.n_frames = 120, every 10th frame). The
-    payload-driven real path (`extract_frames`, byte-slicing MJPEG-AVI
-    containers) is codec territory covered by the bit-exact pytest
-    round trips; this row pins the shardable explode plan."""
+    video rows (meta.n_frames = 120, every 10th frame); this row pins
+    the shardable explode plan."""
     from .operators.multimodal import frame_sample, synthesize_media
 
     media = synthesize_media(spark, n=96, seed=42)
@@ -3618,8 +3614,8 @@ REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
     # bit-exactly in DuckDB via a recursive-CTE unroll
     "balanced_partition": (q_balanced_partition,
                            _balanced_partition_sql(rounds=5)),
-    # multimodal kernel plumbing (fake-path byte-histogram features are
-    # exact hex arithmetic; real codecs are pytest bit-exact territory)
+    # multimodal kernel plumbing (byte-histogram features are exact hex
+    # arithmetic)
     "media_features": (q_media_features, _ORACLE_MEDIA_FEATURES),
     "media_frame_sample": (q_media_frame_sample, _ORACLE_FRAME_SAMPLE),
 }

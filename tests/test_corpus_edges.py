@@ -69,10 +69,16 @@ def test_power_law_hub_exists(spark):
 
 
 def test_extract_refs_jvm_matches_pandas_reference(spark):
-    """The JVM CASE/regexp_extract_all extractor (hot path since r6)
+    r"""The JVM CASE/regexp_extract_all extractor (hot path since r6)
     must agree with the pandas-UDF reference implementation on every
-    language, edge syntax, and the no-match/unknown-lang cases."""
+    language, edge syntax, and the no-match/unknown-lang cases, and with
+    the DuckDB oracle's RE2 on every row but the documented ``\v`` one.
+    The line-break and whitespace rows pin the input contract: lines
+    end at ``\n`` only, and ``\s`` is ASCII."""
+    import duckdb
+
     from cim_framework_graph_partitioning_spark.functions.text import (
+        _IMPORT_RE,
         extract_refs,
         extract_refs_pandas,
     )
@@ -88,6 +94,13 @@ def test_extract_refs_jvm_matches_pandas_reference(spark):
         ("haskell", "import Data.List\n"),  # unsupported lang -> []
         ("python", "no imports here"),
         ("python", ""),
+        ("python", "x=1\rimport a"),  # lone CR is no line break
+        ("python", "x=1\u2028import a"),
+        ("python", "x=1\u0085import a"),
+        ("python", "x=1\r\nimport a"),
+        ("python", "\u00a0import a"),  # NBSP is not \s
+        ("c", "\u00a0#include <x.h>"),
+        ("python", "\x0bimport a"),  # \v: \s in Java and Python, not in RE2
     ]
     df = spark.createDataFrame(rows, "lang string, content string")
     got = df.select(
@@ -97,6 +110,15 @@ def test_extract_refs_jvm_matches_pandas_reference(spark):
         "lang", extract_refs_pandas(F.col("content"), F.col("lang")).alias("r")
     ).collect()
     assert [(r.lang, r.r) for r in got] == [(r.lang, r.r) for r in want]
+    with duckdb.connect() as con:
+        for (lang, content), r in zip(rows, got):
+            rx = _IMPORT_RE.get(lang)
+            if rx is None or content.startswith("\x0b"):
+                continue
+            re2 = con.execute(
+                "SELECT regexp_extract_all(?, ?, 1)", [content, "(?m)" + rx.pattern]
+            ).fetchone()[0]
+            assert r.r == re2, (lang, content)
     # and on the full synthesized corpus, all 7 languages at once
     files = synthesize_corpus(spark, n_files=300, n_repos=6, seed=11)
     a = files.select(

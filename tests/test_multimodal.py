@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 
 from cim_framework_graph_partitioning_spark.operators.multimodal import (
@@ -44,463 +46,37 @@ def test_empty_payload_handled(spark):
     assert all(r.n_bytes == 0 and sum(r.feature) == 0.0 for r in feats)
 
 
-def test_bmp_roundtrip_and_golden_pixels():
-    """Pure-numpy BMP codec: encode known pixels, decode a REAL file
-    byte-stream back, compare exactly (incl. 4-byte row padding with a
-    non-multiple-of-4 width and bottom-up row order)."""
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        decode_bmp,
-        encode_bmp,
-    )
-
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, size=(5, 3, 3), dtype=np.uint8)  # w=3 → pad
-    blob = decode_bmp(encode_bmp(img))
-    assert blob.shape == (5, 3, 3)
-    assert (blob == img).all()
-
-    # golden: hand-built 2x2 with known corner colors (BGR)
-    golden = np.array(
-        [[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 255, 255]]],
-        dtype=np.uint8,
-    )
-    payload = encode_bmp(golden)
-    assert payload[:2] == b"BM"
-    out = decode_bmp(payload)
-    assert (out[0, 0] == [255, 0, 0]).all()  # top-left blue
-    assert (out[1, 1] == [255, 255, 255]).all()  # bottom-right white
-
-    import pytest
-
-    with pytest.raises(ValueError):
-        decode_bmp(b"NOPE" + b"\x00" * 64)
-    with pytest.raises(ValueError):
-        decode_bmp(payload[:20])  # truncated
-    zero_h = bytearray(payload)
-    zero_h[22:26] = (0).to_bytes(4, "little")  # height 0: no pixels
-    with pytest.raises(ValueError):  # must not 'succeed' into NaN features
-        decode_bmp(bytes(zero_h))
-
-
-def test_real_bmp_decode_end_to_end(spark):
-    """A media table whose image payloads are real BMP files must flow
-    through decode_and_featurize with allow_fake=False (the codec-less
-    raise only guards NON-BMP payloads) and produce pixel-derived
-    features: [w, h, mean BGR, ...]."""
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        encode_bmp,
-    )
-
-    rows = []
-    for i in range(6):
-        img = np.full((4, 7, 3), i * 20, dtype=np.uint8)
-        rows.append((i, "image", bytearray(encode_bmp(img)),
-                     (7, 4, None, None)))
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-    )
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r.media_id: list(r.feature)
-             for r in decode_and_featurize(media, allow_fake=False).collect()}
-    assert len(feats) == 6
-    for i, f in feats.items():
-        assert f[0] == 7.0 and f[1] == 4.0  # width, height from pixels
-        assert abs(f[2] - i * 20) < 1e-9  # mean B of a constant image
-        assert abs(f[5]) < 1e-9  # std of a constant image
-
-    # mixed batch with a non-BMP payload must raise without allow_fake
-    import pytest
-
-    bad = spark.createDataFrame(
-        [(99, "image", bytearray(b"JUNKJUNK" * 10), (None, None, None, None))],
-        MEDIA_SCHEMA,
-    )
-    with pytest.raises(Exception, match="NotImplementedError|non-BMP"):
-        decode_and_featurize(media.unionByName(bad), allow_fake=False).collect()
-
-def test_wav_roundtrip_and_golden_samples():
-    """Pure-python WAV codec: encode a known PCM signal, decode the REAL
-    RIFF byte-stream back, compare to quantization error; golden
-    features (sample_rate, channels, frames, duration, RMS, ZCR)."""
-    import pytest
-
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        _wav_features,
-        decode_wav,
-        encode_wav,
-    )
-
-    t = np.arange(1600) / 16000.0
-    sig = 0.5 * np.sin(2 * np.pi * 440.0 * t)  # 100 ms of A440 at 16 kHz
-    payload = encode_wav(sig, 16000)
-    assert payload[:4] == b"RIFF" and payload[8:12] == b"WAVE"
-    out, sr = decode_wav(payload)
-    assert sr == 16000 and out.shape == (1600, 1)
-    assert np.abs(out[:, 0] - sig).max() < 1.0 / 32767  # 16-bit quantization
-
-    feats = _wav_features(out, sr)
-    assert feats[0] == 16000.0 and feats[1] == 1.0 and feats[2] == 1600.0
-    assert abs(feats[3] - 0.1) < 1e-12  # duration
-    assert abs(feats[4] - 0.5 / np.sqrt(2)) < 1e-3  # RMS of a 0.5 sine
-    # 440 Hz at 16 kHz: 2 crossings/period * 440 * 0.1 s / 1600 samples
-    assert abs(feats[5] - 2 * 440 * 0.1 / 1600) < 5e-3
-
-    # stereo survives the round trip with channels intact
-    stereo = np.stack([sig, -sig], axis=1)
-    out2, _ = decode_wav(encode_wav(stereo, 8000))
-    assert out2.shape == (1600, 2)
-    assert np.abs(out2 - stereo).max() < 1.0 / 32767
-
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFX" + b"\x00" * 64)
-    with pytest.raises(ValueError):
-        decode_wav(payload[:30])  # truncated
-
-
-def test_real_wav_decode_end_to_end(spark):
-    """Media rows carrying real WAV payloads flow through
-    decode_and_featurize with allow_fake=False and produce
-    signal-derived features."""
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_wav,
-    )
-
-    rows = []
-    for i in range(4):
-        sig = np.full(800, 0.1 * (i + 1))  # DC signal, known RMS
-        rows.append((i, "audio", bytearray(encode_wav(sig, 8000)),
-                     (None, None, 8000, None)))
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r.media_id: list(r.feature)
-             for r in decode_and_featurize(media, allow_fake=False).collect()}
-    assert len(feats) == 4
-    for i, f in feats.items():
-        assert f[0] == 8000.0 and f[1] == 1.0 and f[2] == 800.0
-        assert abs(f[4] - 0.1 * (i + 1)) < 1e-3  # RMS of a DC signal
-
-
 def test_corrupt_magic_falls_back_to_fake(spark):
-    """A payload that starts 'BM'/'RIFF' but is NOT decodable must take
-    the fake path under allow_fake=True (regression: it used to raise
-    out of the kernel and fail the whole job), and raise under
-    allow_fake=False."""
-    import pytest
-
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-    )
-
-    rows = [
-        (0, "image", bytearray(b"BM" + b"\x7f" * 100), (None,) * 4),
-        (1, "audio", bytearray(b"RIFF" + b"\x7f" * 100), (None,) * 4),
+    """Every payload gets the byte histogram: feature[j] is the
+    L1-normalised sum of its bytes at positions ≡ j (mod 16), whatever
+    codec magic it starts with. One payload is a valid 1x1 24-bit BMP,
+    which the kernel must not decode as an image."""
+    # file header (magic, size, reserved, pixel offset), BITMAPINFOHEADER
+    # (size, w, h, planes, bpp, BI_RGB, image size, 72 DPI, no palette),
+    # then one BGR pixel with its row padded to 4 bytes
+    bmp_1x1 = struct.pack(
+        "<2sIIIIiiHHIIiiII", b"BM", 58, 0, 54, 40, 1, 1, 1, 24, 0, 4,
+        2835, 2835, 0, 0,
+    ) + b"\x10\x20\x30\x00"
+    assert len(bmp_1x1) == 58
+    payloads = [
+        bmp_1x1,
+        b"BM" + b"\x7f" * 100,
+        b"\x89PNG\r\n\x1a\n" + b"\x01" * 37,
+        b"\xff\xd8\xff\xe0" + bytes(range(200)),
+        b"RIFF" + (36).to_bytes(4, "little") + b"WAVEfmt " + b"\x02" * 29,
+        b"RIFF" + (64).to_bytes(4, "little") + b"AVI LIST" + b"\x03" * 61,
     ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = decode_and_featurize(media, allow_fake=True).collect()
-    assert len(feats) == 2  # job survives, fake features emitted
-    assert all(abs(sum(r.feature) - 1.0) < 1e-9 for r in feats)
-    with pytest.raises(Exception, match="NotImplementedError|not decodable"):
-        decode_and_featurize(media, allow_fake=False).collect()
-
-
-def test_png_roundtrip_all_filters_and_variants():
-    """Stdlib-zlib PNG codec: every scanline filter (None/Sub/Up/
-    Average/Paeth + per-row mixed) must reconstruct the exact pixels;
-    grayscale and RGBA color types decode through the shared BGR
-    contract; corrupt payloads and unsupported variants raise."""
-    import zlib
-
-    import pytest
-
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        _PNG_SIG,
-        decode_bmp,
-        decode_png,
-        encode_bmp,
-        encode_png,
+    media = spark.createDataFrame(
+        [(i, "image", bytearray(p)) for i, p in enumerate(payloads)],
+        "media_id long, kind string, payload binary",
     )
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, size=(13, 9, 3), dtype=np.uint8)
-    for ft in [0, 1, 2, 3, 4, "mixed"]:
-        out = decode_png(encode_png(img, ft))
-        assert out.shape == img.shape and (out == img).all(), f"filter {ft}"
-
-    # cross-codec contract: identical pixels through PNG and BMP decode
-    # to identical arrays (both BGR, top-down)
-    assert (decode_png(encode_png(img)) == decode_bmp(encode_bmp(img))).all()
-
-    def chunk(ctype, data):
-        return (
-            len(data).to_bytes(4, "big") + ctype + data
-            + (zlib.crc32(ctype + data) & 0xFFFFFFFF).to_bytes(4, "big")
+    got = {r.media_id: r for r in decode_and_featurize(media).collect()}
+    assert sorted(got) == list(range(len(payloads)))
+    for i, p in enumerate(payloads):
+        b = np.frombuffer(p, dtype=np.uint8)
+        sums = np.bincount(
+            np.arange(len(b)) % _FEATURE_DIM, weights=b, minlength=_FEATURE_DIM
         )
-
-    # grayscale (color type 0): replicated into all three BGR channels
-    g = rng.randint(0, 256, size=(5, 9), dtype=np.uint8)
-    body = bytearray()
-    for y in range(5):
-        body.append(0)
-        body += g[y].tobytes()
-    pay = (
-        _PNG_SIG
-        + chunk(b"IHDR", (9).to_bytes(4, "big") + (5).to_bytes(4, "big")
-                + bytes([8, 0, 0, 0, 0]))
-        + chunk(b"IDAT", zlib.compress(bytes(body)))
-        + chunk(b"IEND", b"")
-    )
-    dg = decode_png(pay)
-    assert dg.shape == (5, 9, 3) and (dg[..., 0] == g).all() and (dg[..., 2] == g).all()
-
-    # RGBA (color type 6): alpha dropped, RGB -> BGR
-    ra = rng.randint(0, 256, size=(4, 6, 4), dtype=np.uint8)
-    body = bytearray()
-    for y in range(4):
-        body.append(0)
-        body += ra[y].tobytes()
-    pay = (
-        _PNG_SIG
-        + chunk(b"IHDR", (6).to_bytes(4, "big") + (4).to_bytes(4, "big")
-                + bytes([8, 6, 0, 0, 0]))
-        + chunk(b"IDAT", zlib.compress(bytes(body)))
-        + chunk(b"IEND", b"")
-    )
-    assert (decode_png(pay) == ra[..., :3][..., ::-1]).all()
-
-    # corrupt: bad signature, truncated, CRC-smashed
-    good = encode_png(img)
-    for bad in [b"NOPE" + good[4:], good[:40], good[:-5] + b"XXXXX"]:
-        with pytest.raises(ValueError):
-            decode_png(bad)
-
-    # refused: palette WITHOUT a PLTE chunk (palette itself is supported
-    # — see test_png_palette_decode), a spec-invalid depth (3), and
-    # 16-bit palette (spec-invalid combination)
-    ih = (3).to_bytes(4, "big") + (3).to_bytes(4, "big")
-    for variant in [bytes([8, 3, 0, 0, 0]), bytes([3, 0, 0, 0, 0]),
-                    bytes([16, 3, 0, 0, 0])]:
-        pay = (
-            _PNG_SIG + chunk(b"IHDR", ih + variant)
-            + chunk(b"IDAT", zlib.compress(b"\x00" * 30)) + chunk(b"IEND", b"")
-        )
-        with pytest.raises(ValueError):
-            decode_png(pay)
-
-
-def test_png_16bit_and_adam7_interlace():
-    """The two formerly-stubbed PNG variants are real now: depth-16
-    (byte-pair lanes through the same filters, high-byte fold on
-    decode; encoder widens x*257 so round trips are exact) and Adam7
-    interlacing (seven independently-filtered sub-images), in every
-    filter mode and in combination — including dimensions small enough
-    to leave some passes empty."""
-    import pytest
-
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-    )
-
-    rng = np.random.RandomState(7)
-    for h, w in [(13, 9), (3, 3), (1, 1), (8, 2)]:
-        img = rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
-        for ft in [0, 4, "mixed"]:
-            for depth in (8, 16):
-                for inter in (0, 1):
-                    pay = encode_png(img, ft, depth=depth, interlace=inter)
-                    out = decode_png(pay)
-                    assert (out == img).all(), (h, w, ft, depth, inter)
-    # 16-bit payloads really are wider on the wire
-    img = rng.randint(0, 256, size=(16, 16, 3), dtype=np.uint8)
-    assert len(encode_png(img, depth=16)) > len(encode_png(img, depth=8))
-    # truncated interlace stream raises (not a silent partial image)
-    pay = encode_png(img, 0, interlace=1)
-    import zlib as _z
-
-    # rebuild with an IDAT holding half the filtered stream
-    body = _z.decompress(pay[pay.find(b"IDAT") + 4 : pay.find(b"IEND") - 4])
-    half = _z.compress(body[: len(body) // 2])
-
-    def chunk(ctype, data):
-        return (
-            len(data).to_bytes(4, "big") + ctype + data
-            + (_z.crc32(ctype + data) & 0xFFFFFFFF).to_bytes(4, "big")
-        )
-
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        _PNG_SIG,
-    )
-
-    ih = (16).to_bytes(4, "big") + (16).to_bytes(4, "big") + bytes(
-        [8, 2, 0, 0, 1]
-    )
-    bad = _PNG_SIG + chunk(b"IHDR", ih) + chunk(b"IDAT", half) + chunk(b"IEND", b"")
-    with pytest.raises(ValueError):
-        decode_png(bad)
-
-
-def _pack_subbyte_png(vals, depth, color, interlace=0, plte=None):
-    """Test-side packer for sub-byte PNGs: MSB-first bit packing, filter
-    0 scanlines, optional Adam7 pass split — an independent
-    re-derivation of the spec used to cross-check the decoder."""
-    import zlib
-
-    import numpy as np
-
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        _ADAM7,
-        _PNG_SIG,
-    )
-
-    vals = np.asarray(vals, dtype=np.uint8)
-    h, w = vals.shape
-
-    def pack_rows(sub):
-        hp, wp = sub.shape
-        out = bytearray()
-        for y in range(hp):
-            bits = []
-            for v in sub[y]:
-                bits += [(int(v) >> (depth - 1 - i)) & 1 for i in range(depth)]
-            while len(bits) % 8:
-                bits.append(0)
-            out.append(0)  # filter None
-            out += np.packbits(np.array(bits, dtype=np.uint8)).tobytes()
-        return bytes(out)
-
-    if interlace == 0:
-        body = pack_rows(vals)
-    else:
-        body = b"".join(
-            pack_rows(vals[y0::dy, x0::dx])
-            for x0, y0, dx, dy in _ADAM7
-            if vals[y0::dy, x0::dx].size
-        )
-
-    def chunk(ctype, data):
-        return (
-            len(data).to_bytes(4, "big") + ctype + data
-            + (zlib.crc32(ctype + data) & 0xFFFFFFFF).to_bytes(4, "big")
-        )
-
-    ih = (
-        w.to_bytes(4, "big") + h.to_bytes(4, "big")
-        + bytes([depth, color, 0, 0, interlace])
-    )
-    pay = _PNG_SIG + chunk(b"IHDR", ih)
-    if plte is not None:
-        pay += chunk(b"PLTE", plte)
-    return pay + chunk(b"IDAT", zlib.compress(body)) + chunk(b"IEND", b"")
-
-
-def test_png_subbyte_depths():
-    """1/2/4-bit gray and palette — the last static-PNG depths — decode
-    against independently hand-packed payloads: gray levels scale to
-    full 8-bit (0/255, x85, x17), palette indices look up PLTE, and
-    Adam7 interlacing composes with sub-byte packing (partial trailing
-    bytes per pass row)."""
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        decode_png,
-    )
-
-    rng = np.random.RandomState(5)
-    for depth, scale in [(1, 255), (2, 85), (4, 17)]:
-        for h, w in [(5, 9), (3, 3), (1, 7)]:  # odd widths: partial bytes
-            vals = rng.randint(0, 1 << depth, (h, w)).astype(np.uint8)
-            for inter in (0, 1):
-                out = decode_png(
-                    _pack_subbyte_png(vals, depth, 0, interlace=inter)
-                )
-                assert out.shape == (h, w, 3), (depth, h, w, inter)
-                assert (out[..., 0] == vals * scale).all(), (depth, inter)
-                assert (out[..., 1] == out[..., 0]).all()
-
-    # 4-bit palette: indices resolve through PLTE (RGB -> BGR)
-    pal_rgb = rng.randint(0, 256, (16, 3)).astype(np.uint8)
-    vals = rng.randint(0, 16, (6, 5)).astype(np.uint8)
-    for inter in (0, 1):
-        out = decode_png(
-            _pack_subbyte_png(vals, 4, 3, interlace=inter,
-                              plte=pal_rgb.tobytes())
-        )
-        assert (out == pal_rgb[vals][..., ::-1]).all(), inter
-    # out-of-range palette index still raises at sub-byte depths
-    import pytest
-
-    short_pal = pal_rgb[:4].tobytes()  # only 4 entries, indices go to 15
-    with pytest.raises(ValueError):
-        decode_png(_pack_subbyte_png(vals, 4, 3, plte=short_pal))
-
-
-def test_real_mixed_codecs_end_to_end(spark):
-    """One media table mixing real BMP, PNG, and WAV payloads must flow
-    through decode_and_featurize with allow_fake=False — all three real
-    codecs coexist in one mapInPandas kernel — and BMP/PNG of the same
-    pixels must produce identical features."""
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_bmp,
-        encode_png,
-        encode_wav,
-    )
-
-    img = np.full((4, 7, 3), 60, dtype=np.uint8)
-    sig = np.sin(np.linspace(0, 40 * np.pi, 800))
-    rows = [
-        (0, "image", bytearray(encode_bmp(img)), (7, 4, None, None)),
-        (1, "image", bytearray(encode_png(img, "mixed")), (7, 4, None, None)),
-        (2, "audio", bytearray(encode_wav(sig, 8000)), (None, None, 8000, None)),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    feats = {r.media_id: list(r.feature)
-             for r in decode_and_featurize(media, allow_fake=False).collect()}
-    assert len(feats) == 3
-    assert feats[0] == feats[1]  # same pixels, same features, either codec
-    assert feats[0][0] == 7.0 and feats[0][1] == 4.0
-    assert feats[2][0] == 8000.0  # WAV feature leads with sample_rate
-
-
-def test_png_palette_decode():
-    """Color type 3: indices resolve through one vectorized PLTE lookup
-    into the BGR contract; a palette image without PLTE, or with an
-    out-of-range index, raises."""
-    import zlib
-
-    import pytest
-
-    from cim_framework_graph_partitioning_spark.operators.multimodal import (
-        _PNG_SIG,
-        decode_png,
-    )
-
-    def chunk(ctype, data):
-        return (
-            len(data).to_bytes(4, "big") + ctype + data
-            + (zlib.crc32(ctype + data) & 0xFFFFFFFF).to_bytes(4, "big")
-        )
-
-    pal = bytes([255, 0, 0,  0, 255, 0,  0, 0, 255, 10, 20, 30])  # 4 RGB entries
-    idx = np.array([[0, 1, 2, 3], [3, 2, 1, 0]], dtype=np.uint8)
-    body = bytearray()
-    for y in range(2):
-        body.append(0)
-        body += idx[y].tobytes()
-    ihdr = (4).to_bytes(4, "big") + (2).to_bytes(4, "big") + bytes([8, 3, 0, 0, 0])
-    pay = (
-        _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"PLTE", pal)
-        + chunk(b"IDAT", zlib.compress(bytes(body))) + chunk(b"IEND", b"")
-    )
-    out = decode_png(pay)
-    assert out.shape == (2, 4, 3)
-    assert (out[0, 0] == [0, 0, 255]).all()   # palette 0 = red -> BGR
-    assert (out[0, 3] == [30, 20, 10]).all()  # palette 3 -> BGR
-    assert (out[1, 0] == out[0, 3]).all()
-
-    # out-of-range index
-    body2 = bytearray(b"\x00" + bytes([7, 0, 0, 0]) + b"\x00" + bytes([0, 0, 0, 0]))
-    pay2 = (
-        _PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"PLTE", pal)
-        + chunk(b"IDAT", zlib.compress(bytes(body2))) + chunk(b"IEND", b"")
-    )
-    with pytest.raises(ValueError):
-        decode_png(pay2)
+        assert got[i].n_bytes == len(p)
+        assert got[i].feature == list(sums / sums.sum()), i
